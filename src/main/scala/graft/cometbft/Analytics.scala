@@ -36,26 +36,21 @@ trait Analytic {
   def name: String
 
   /** Standalone entry: any frames persisted for the sinks' plans stay
-    * cached for the session (callers that care pass a [[FrameTracker]]
-    * via the overload and release it themselves). */
+    * cached for the session (callers that care call [[runFrom]] with a
+    * [[FrameTracker]] and release it themselves). */
   def run(events: DataFrame): Seq[(String, DataFrame)]
 
-  /** [[run]] with per-run persist tracking: frames the analytic persists
-    * are registered on `tracker`, and the caller releases them once the
-    * sinks are written. Default delegates to [[run]] — self-contained
-    * analytics persist nothing. */
-  def run(events: DataFrame, tracker: FrameTracker): Seq[(String, DataFrame)] =
-    run(events)
-
-  /** Like [[run]], but may REUSE result tables already materialized by
-    * earlier analytics of the same pipeline run (keyed by table name) —
-    * the "store once, read downstream" boundary extended to derived
-    * tables. Default: ignore them (every analytic is self-contained, as
-    * in the reference's independent plugins); composites like
-    * TracerEvents override to avoid recomputing a sibling's machine. */
+  /** The pipeline's entry. It may REUSE result tables already
+    * materialized by earlier analytics of the same pipeline run (keyed by
+    * table name) — the "store once, read downstream" boundary extended to
+    * derived tables — and registers the frames it persists on `tracker`,
+    * which the caller releases once the sinks are written. Default: the
+    * self-contained [[run]] (as in the reference's independent plugins);
+    * composites like TracerEvents override to avoid recomputing a
+    * sibling's machine, and analytics that persist override to track. */
   def runFrom(events: DataFrame, stored: Map[String, DataFrame],
               tracker: FrameTracker): Seq[(String, DataFrame)] =
-    run(events, tracker)
+    run(events)
 
   /** Names of the sibling ANALYTICS whose stored tables [[runFrom]]
     * consumes. The pipeline schedules this analytic only after every
@@ -473,9 +468,10 @@ object Analytics {
     }
 
     def run(events: DataFrame): Seq[(String, DataFrame)] =
-      run(events, new FrameTracker)
+      runFrom(events, Map.empty, new FrameTracker)
 
-    override def run(events: DataFrame, tracker: FrameTracker): Seq[(String, DataFrame)] = {
+    override def runFrom(events: DataFrame, stored: Map[String, DataFrame],
+                         tracker: FrameTracker): Seq[(String, DataFrame)] = {
       val sends = events.filter(col("event_type").startsWith("send_"))
         .select(
           col("node_id").as("sender"), col("recipient_peer_id").as("receiver"),
@@ -573,8 +569,9 @@ object Analytics {
   object TimeoutAnalysis extends Analytic {
     val name = "timeout_analysis"
     def run(events: DataFrame): Seq[(String, DataFrame)] =
-      run(events, new FrameTracker)
-    override def run(events: DataFrame, tracker: FrameTracker): Seq[(String, DataFrame)] = {
+      runFrom(events, Map.empty, new FrameTracker)
+    override def runFrom(events: DataFrame, stored: Map[String, DataFrame],
+                         tracker: FrameTracker): Seq[(String, DataFrame)] = {
       val timeouts = events.filter(col("event_type") === "scheduled_timeout")
         .select(col("node_id"), col("validator_address"), col("height"),
           col("round"), col("timeout_step").as("step"), col("duration_ms"),

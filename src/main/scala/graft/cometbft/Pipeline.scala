@@ -1,7 +1,16 @@
 package graft.cometbft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.DriverPool
 
 /** End-to-end CometBFT ETL pipeline — the Spark-native equivalent of the
   * reference's `main()` (§3.1): read log dir → normalize → write `events` →
@@ -16,186 +25,92 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** Spark writes in flight at once: every sink write is one task on a
+    * single driver pool of this width. */
+  private val Width = 8
+
+  /** How long a sink's row count may take to arrive after its write. */
+  private val CountBound = 30.seconds
+
   def run(spark: SparkSession, logDir: String, warehouse: String,
           analytics: Seq[Analytic] = Analytics.all): Map[String, Long] = {
     val raw    = LogIngest.read(spark, logDir)
     val events = Normalize.normalize(raw)
 
-    val eventsPath = s"$warehouse/events"
-    // Row counts ride the WRITE job itself (CollectMetrics accumulators
-    // via observe()) instead of a read-back count() per sink — the
-    // fixture e2e profile showed 14 pure-counting jobs of its 129, all
-    // fixed overhead at any data size. A batch write runs under its OWN
-    // QueryExecution (the insert command wraps the plan), so the metric
-    // must be captured through a QueryExecutionListener — Spark's
-    // documented batch-observe pattern; reading
-    // `observed.queryExecution.observedMetrics` would consult the
-    // never-executed analysis-time plan and silently return null
-    // (caught by the PipelineSpec counts test).
-    // per-run unique metric suffix: the listener is session-global, so two
-    // CONCURRENT runs in one JVM would otherwise each capture the other's
-    // same-named metric and report the wrong row count (round-7 ADVICE)
-    val runToken = java.util.UUID.randomUUID().toString.replace("-", "")
-    val capturedMetrics = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
-    val metricListener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        qe.observedMetrics.foreach { case (k, v) => capturedMetrics.put(k, v); () }
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(metricListener)
-
-    def writeCounted(df: DataFrame, path: String, metricBase: String,
-                     partitionCols: Seq[String] = Nil): Long = {
-      val metric = s"${metricBase}_$runToken"
-      val observed = df.observe(metric, count(lit(1)).as("rows"))
-      val w = observed.write.mode("overwrite")
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).parquet(path)
-      awaitObservedMetric(capturedMetrics, metric)
+    // Row counts ride the WRITE job itself (an Observation on the written
+    // frame) instead of a read-back count() per sink, which would add a
+    // pure-counting job per table. A failed write throws before its count
+    // is ever read (its Observation would complete with 0 rows).
+    val observed = new ConcurrentLinkedQueue[(String, Observation)]()
+    def write(df: DataFrame, table: String, partitionCols: String*): Unit = {
+      val obs = Observation()
+      val w = df.observe(obs, count(lit(1)).as("rows")).write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(s"$warehouse/$table")
+      observed.add(table -> obs)
+      ()
     }
 
-    try {
-      val nEvents = writeCounted(
-        events
-          // O1: event-time order within each partition; partitioning by
-          // event_type turns every analytic's type filter into partition
-          // pruning (each job scans only its event families).
-          .repartition(col("event_type"))
-          .sortWithinPartitions(col("ts_ns")),
-        eventsPath, "graft_rows_events", partitionCols = Seq("event_type"))
-      val stored = spark.read.parquet(eventsPath)
-      val counts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-      counts.put("events", nEvents)
-      // later analytics may read the tables earlier ones wrote (runFrom) —
-      // e.g. the tracer unions the stored consensus + p2p tables instead of
-      // re-running both machines. The DEPENDENCY graph is DECLARED on the
-      // trait (`Analytic.dependsOn`, the analytic names whose stored
-      // tables runFrom consumes — no more identity-hardcoded split), and
-      // scheduling is by completion future: every analytic's work chains
-      // on its dependencies' futures (CompletableFuture composition, so a
-      // waiting dependent never occupies a pool thread), independents
-      // start immediately, and a dependent starts the moment its LAST
-      // dependency lands instead of after the whole independent pool
-      // drains (guide §2.6: the pipeline is ~90 small jobs whose barriers
-      // leave most cores idle; overlapping job chains back-fills them,
-      // and the tracer now overlaps the straggling independents too).
-      // Each sink's observed metric name is already unique per
-      // (run, table), and the captured-metric map is concurrent, so
-      // counts stay exact under the pool.
-      val writtenMap = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-      def runOne(a: Analytic, written: Map[String, DataFrame]): Unit = {
-        // per-run tracker: the analytic registers any frames it persists
-        // for its sinks' plans; released once all its tables are on disk
-        // (repeated or CONCURRENT runs in one session must neither pin
-        // events-sized blocks nor unpersist each other's)
+    write(events
+      // O1: event-time order within each partition; partitioning by
+      // event_type turns every analytic's type filter into partition
+      // pruning (each job scans only its event families).
+      .repartition(col("event_type"))
+      .sortWithinPartitions(col("ts_ns")),
+      "events", "event_type")
+    val stored = spark.read.parquet(s"$warehouse/events")
+
+    // Later analytics may read the tables earlier ones wrote (runFrom):
+    // the tracer unions the stored consensus + p2p tables instead of
+    // re-running both machines. An analytic starts once every enabled
+    // sibling it `dependsOn` has written all its tables; a dependency
+    // that is not enabled is absent from `written`, and runFrom computes
+    // it instead. The read-back is lazy (schema from the footer, no job).
+    val written = new ConcurrentHashMap[String, DataFrame]()
+    val enabled = analytics.map(_.name).toSet
+    val waiting = analytics.map(a => a.name -> new AtomicInteger(a.dependsOn.count(enabled))).toMap
+    val dependents = analytics.flatMap(a => a.dependsOn.filter(enabled).map(_ -> a))
+      .groupMap(_._1)(_._2)
+    def sink(table: String, df: DataFrame): Unit = {
+      write(df, table)
+      written.put(table, spark.read.parquet(s"$warehouse/$table"))
+      ()
+    }
+    DriverPool(Width) { pool =>
+      // An analytic writes its first sink, which materializes the frames
+      // it persists on its tracker; its other sinks then reuse them as
+      // separate tasks. The tracker is released once all have ended.
+      def start(a: Analytic): Unit = pool.submit {
         val tracker = new FrameTracker
-        try {
-        val tables = a.runFrom(stored, written, tracker)
-        def writeOne(table: String, df: DataFrame): Unit = {
-          val path = s"$warehouse/$table"
-          counts.put(table, writeCounted(df, path, s"graft_rows_$table"))
-          // the read-back is LAZY (schema comes from the footer, no job) —
-          // downstream consumers via `written` plan against the stored
-          // table, not this analytic's live DAG
-          writtenMap.put(table, spark.read.parquet(path))
-          ()
+        val rest = try {
+          val inputs = if (a.dependsOn.isEmpty) Map.empty[String, DataFrame] else written.asScala.toMap
+          val tables = a.runFrom(stored, inputs, tracker)
+          tables.headOption.foreach((sink _).tupled)
+          tables.drop(1)
+        } catch { case t: Throwable => tracker.release(); throw t }
+        pool.submitAll(rest.map { case (t, df) => () => sink(t, df) }) { ok =>
+          tracker.release()
+          if (ok) dependents.getOrElse(a.name, Nil)
+            .foreach(d => if (waiting(d.name).decrementAndGet() == 0) start(d))
         }
-        tables.headOption.foreach { case (t, df) => writeOne(t, df) }
-        val rest = tables.drop(1)
-        // a multi-table analytic's remaining sinks are independent jobs
-        // over frames the FIRST write already materialized (the tracked
-        // persists), so they overlap on their own small pool — the
-        // network-latency analytic alone is five sinks / ~36 small jobs,
-        // the pipeline's measured critical path
-        if (rest.sizeIs <= 1) rest.foreach { case (t, df) => writeOne(t, df) }
-        else {
-          val sinkPool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(rest.size, 3))
-          try {
-            val fs = rest.map { case (t, df) =>
-              sinkPool.submit(new java.util.concurrent.Callable[Unit] {
-                override def call(): Unit = writeOne(t, df)
-              })
-            }
-            // collect every outcome (no sink left writing), then rethrow
-            val errs = fs.flatMap(f => scala.util.Try(f.get()).failed.toOption)
-            errs.headOption.foreach {
-              case e: java.util.concurrent.ExecutionException => throw e.getCause
-              case e => throw e
-            }
-          } finally sinkPool.shutdown()
-        }
-        } finally tracker.release()
       }
-      if (analytics.sizeIs <= 1) analytics.foreach(runOne(_, Map.empty))
-      else {
-        val byName = analytics.map(_.name).toSet
-        val done = analytics.map(a =>
-          a.name -> new java.util.concurrent.CompletableFuture[Unit]).toMap
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(analytics.size, 8))
-        try {
-          analytics.foreach { a =>
-            // a declared dependency that is NOT enabled in this run is
-            // skipped: runFrom sees it absent from `written` and falls
-            // back to computing — the historical sequential behavior
-            val deps = a.dependsOn.intersect(byName).toSeq.map(done(_))
-            val gate = java.util.concurrent.CompletableFuture.allOf(deps: _*)
-            gate.whenCompleteAsync((_, depErr) => {
-              val f = done(a.name)
-              if (depErr != null)
-                f.completeExceptionally(new IllegalStateException(
-                  s"${a.name}: a dependency analytic failed", depErr))
-              else try {
-                val written =
-                  if (a.dependsOn.isEmpty) Map.empty[String, DataFrame]
-                  else scala.jdk.CollectionConverters
-                    .MapHasAsScala(writtenMap).asScala.toMap
-                runOne(a, written)
-                f.complete(()); ()
-              } catch { case t: Throwable => f.completeExceptionally(t); () }
-            }, pool)
-          }
-          // await EVERY outcome before rethrowing: no analytic is still
-          // writing when the listener is unregistered (a failure used to
-          // propagate while in-flight siblings kept writing, each then
-          // stalling 30s in awaitObservedMetric on a background thread)
-          val failures = analytics.flatMap { a =>
-            try { done(a.name).get(); None }
-            catch {
-              case e: java.util.concurrent.ExecutionException => Some(e.getCause)
-              case e: Throwable => Some(e)
-            }
-          }
-          failures.headOption.foreach(throw _)
-        } finally pool.shutdown()
-      }
-      scala.jdk.CollectionConverters.MapHasAsScala(counts).asScala.toMap
-    } finally spark.listenerManager.unregister(metricListener)
+      analytics.filter(a => waiting(a.name).get == 0).foreach(start)
+    }
+    val stuck = analytics.filter(a => waiting(a.name).get > 0).map(_.name)
+    require(stuck.isEmpty, s"Pipeline: ${stuck.mkString(", ")} never started: their dependsOn forms a cycle")
+    observed.asScala.map { case (table, obs) => table -> rowCount(table, obs) }.toMap
   }
 
-  /** Wait for a sink's observed row-count metric to arrive on the
-    * listener bus (delivery is asynchronous after the synchronous write
-    * returns). A metric that never arrives — the observe() plumbing
-    * broke, the listener got unregistered, a rename desynced the name —
-    * must FAIL LOUDLY, never report 0 rows as if the sink were empty
-    * (negative-tested in PipelineSpec). */
-  private[cometbft] def awaitObservedMetric(
-      captured: java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row],
-      metric: String, timeoutNs: Long = 30L * 1000 * 1000 * 1000): Long = {
-    val deadline = System.nanoTime() + timeoutNs
-    var row = captured.get(metric)
-    while (row == null && System.nanoTime() < deadline) {
-      Thread.sleep(10)
-      row = captured.get(metric)
+  /** A sink's row count from its write's Observation. A count that never
+    * arrives (the observe plumbing broke) must FAIL LOUDLY, never read as
+    * 0 rows as if the sink were empty (negative-tested in PipelineSpec). */
+  private[cometbft] def rowCount(table: String, obs: Observation,
+                                 bound: FiniteDuration = CountBound): Long =
+    try Await.result(obs.future, bound).getLong(0)
+    catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"Pipeline: row count of $table not delivered within $bound of its write")
     }
-    if (row == null) throw new IllegalStateException(
-      s"Pipeline: observed metric $metric not delivered within ${timeoutNs / 1000000000L}s of the write")
-    Option(row.get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-  }
 
   /** CLI: graft.cometbft.Pipeline <logDir> <warehouseDir> [analytics-csv]
     * — the optional third arg mirrors the reference's YAML plugin list

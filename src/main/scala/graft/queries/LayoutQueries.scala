@@ -62,18 +62,7 @@ object LayoutQueries {
     * wall clock approaches the longest chain instead of the sum). The
     * first failure propagates after in-flight builds finish. */
   private def inParallel(tasks: Seq[() => Any]): Unit = {
-    if (tasks.sizeIs <= 1) { tasks.foreach(_.apply()); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(tasks.size, 6))
-    try {
-      val fs = tasks.map(t => pool.submit(new java.util.concurrent.Callable[Any] {
-        override def call(): Any = t()
-      }))
-      fs.foreach { f =>
-        try { f.get(); () }
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally pool.shutdown()
+    graft.DriverPool.map(6, tasks)(_.apply()); ()
   }
 
   // ----------------------------------------- shared clustered events base

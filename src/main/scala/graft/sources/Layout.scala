@@ -286,7 +286,9 @@ object Layout {
         DirSwap.swapRewrite(spark, leaf.toString, retireTarget(leaf))(
           cluster(_, cols, filesPerPartition, scaling))(
           (d, out) => d.write.mode("overwrite").parquet(out))
-    forEachLeaf(work, parallelism)(rewriteLeaf)
+    // a failed leaf propagates only after every started leaf resolved —
+    // no leaf is left mid-swap by a sibling's error
+    graft.DriverPool.map(parallelism, work)(rewriteLeaf)
     writeEnvelopes(spark, dir, (cols ++ indexCols).distinct)
     // commit the finished layout as a manifest snapshot: cross-process
     // readers resolve this (or the previous, still-resolvable) complete
@@ -341,7 +343,7 @@ object Layout {
         }
       }
     }
-    forEachLeaf(work, parallelism)(compactLeaf)
+    graft.DriverPool.map(parallelism, work)(compactLeaf)
     if (rewritten.get > 0) {
       val idx = if (indexCols.nonEmpty) indexCols else indexedColumns(spark, dir)
       // bloom columns the existing index carried are preserved (derived,
@@ -404,31 +406,6 @@ object Layout {
       if (subDirs.isEmpty) Seq(p) else subDirs.flatMap(leaves)
     }
     (fs, leaves(root), retireTarget)
-  }
-
-  /** Run one maintenance action per leaf, `parallelism`-wide from a
-    * driver thread pool. Propagates the FIRST failure, but only after
-    * every submitted leaf resolved — no leaf is left mid-swap by a
-    * sibling's error. */
-  private def forEachLeaf(work: Seq[org.apache.hadoop.fs.Path], parallelism: Int)(
-      action: org.apache.hadoop.fs.Path => Unit): Unit = {
-    if (parallelism == 1 || work.size <= 1) work.foreach(action)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, work.size))
-      try {
-        val futures = work.map { leaf =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit = action(leaf)
-          })
-        }
-        futures.flatMap(f => scala.util.Try(f.get()).failed.toOption)
-          .headOption.foreach {
-            case e: java.util.concurrent.ExecutionException => throw e.getCause
-            case e => throw e
-          }
-      } finally pool.shutdown()
-    }
   }
 
   /** Per-FILE statistics of `cols` for a written table — min/max plus a
@@ -1112,16 +1089,7 @@ object Layout {
           case (rel, _) if !indexedRows.contains(qualRootStr + "/" + rel) => rel
         }
         val footered: Map[String, Long] =
-          if (unknown.isEmpty) Map.empty
-          else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(16, unknown.length))
-            try unknown.map(rel =>
-              rel -> pool.submit(new java.util.concurrent.Callable[Long] {
-                override def call(): Long = footerRows(rel)
-              })).map { case (rel, f) => rel -> f.get() }.toMap
-            finally pool.shutdown()
-          }
+          unknown.toSeq.zip(graft.DriverPool.map(16, unknown.toSeq)(footerRows)).toMap
         val over = perFile.filter { case (rel, n) =>
           val rows = indexedRows.getOrElse(qualRootStr + "/" + rel, footered(rel))
           rows > 0L && n.toDouble / rows > thr

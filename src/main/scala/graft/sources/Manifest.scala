@@ -284,25 +284,13 @@ object Manifest {
     }
     val out = Seq.newBuilder[String]
     var dirs: Seq[Path] = Seq(root)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-    try {
-      while (dirs.nonEmpty) {
-        val listed: Seq[FileStatus] =
-          if (dirs.size == 1) fs.listStatus(dirs.head).toSeq
-          else dirs.map { d =>
-            pool.submit(new java.util.concurrent.Callable[Array[FileStatus]] {
-              override def call(): Array[FileStatus] = fs.listStatus(d)
-            })
-          }.flatMap { f =>
-            try f.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-          }
-        val visible = listed.filter(s => keep(s.getPath.getName))
-        out ++= visible.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .map(toRel)
-        dirs = visible.filter(_.isDirectory).map(_.getPath)
-      }
-    } finally pool.shutdown()
+    while (dirs.nonEmpty) {
+      val listed = graft.DriverPool.map(16, dirs)(fs.listStatus(_).toSeq).flatten
+      val visible = listed.filter(s => keep(s.getPath.getName))
+      out ++= visible.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+        .map(toRel)
+      dirs = visible.filter(_.isDirectory).map(_.getPath)
+    }
     out.result()
   }
 
@@ -806,21 +794,9 @@ object Manifest {
     // an object-store-backed FS each is a round trip (the same reason
     // InMemoryFileIndex lists in parallel)
     val leafSeq = byLeaf.toSeq.sortBy(_._1)
-    val partitions =
-      if (leafSeq.size <= 8) leafSeq.map { case (l, ps) => resolveOne(l, ps) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, leafSeq.size))
-        try leafSeq.map { case (l, ps) =>
-          pool.submit(new java.util.concurrent.Callable[(InternalRow, Seq[FileStatus])] {
-            override def call(): (InternalRow, Seq[FileStatus]) = resolveOne(l, ps)
-          })
-        }.map { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-        finally pool.shutdown()
-      }
+    val partitions = graft.DriverPool.map(if (leafSeq.size <= 8) 1 else 16, leafSeq) {
+      case (l, ps) => resolveOne(l, ps)
+    }
     val index = new graft.plans.ManifestFileIndex(root, m.partSchema, partitions)
     org.apache.spark.sql.GraftBridge.ofRows(spark,
       org.apache.spark.sql.GraftBridge.parquetSnapshotPlan(

@@ -1,6 +1,8 @@
 package graft.cometbft
 
-import org.apache.spark.sql.SparkSession
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -229,21 +231,89 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   // Negative test of the sink-count mechanism: each sink's row count rides
-  // the write job via observe() + a QueryExecutionListener; if the metric
-  // never reaches the listener map (broken observe plumbing, unregistered
-  // listener, desynced name) the pipeline must throw — not report 0 rows.
+  // the write job via an Observation; if it never completes (broken
+  // observe plumbing) the pipeline must throw within its bound, naming the
+  // table — not report 0 rows.
   test("a sink-count metric that never arrives fails loudly, never reads as 0 rows") {
-    val captured = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.Row]()
+    val t0 = System.nanoTime()
     val ex = intercept[IllegalStateException] {
-      graft.cometbft.Pipeline.awaitObservedMetric(captured, "graft_rows_never",
-        timeoutNs = 100L * 1000 * 1000)
+      Pipeline.rowCount("never_written", Observation(), 200.millis)
     }
-    assert(ex.getMessage.contains("graft_rows_never"))
-    // and the happy path reads the delivered value, mapping a NULL count
-    // (zero-row sink) to 0 explicitly rather than by accident
-    import spark.implicits._
-    val row = Seq(Tuple1(42L)).toDF("rows").collect()(0)
-    captured.put("graft_rows_events", row)
-    assert(graft.cometbft.Pipeline.awaitObservedMetric(captured, "graft_rows_events") == 42L)
+    assert((System.nanoTime() - t0).nanos < 10.seconds, "the count step overran its bound")
+    assert(ex.getMessage.contains("never_written"))
+    // and the happy path reads the count of an observed write
+    val obs = Observation()
+    spark.range(42).observe(obs, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(tmp("graft-obs"))
+    assert(Pipeline.rowCount("observed", obs) == 42L)
+  }
+
+  private def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private lazy val smallLogs: String = {
+    val dir = tmp("graft-stub-logs")
+    Fixtures.writeScenario(dir, heights = 2)
+    dir
+  }
+
+  /** A stub analytic writing the given tables (by name → frame builder). */
+  private def stub(n: String, deps: Set[String] = Set.empty)(
+      tables: Map[String, DataFrame] => Seq[(String, DataFrame)]): Analytic = new Analytic {
+    val name = n
+    override val dependsOn = deps
+    def run(events: DataFrame) = runFrom(events, Map.empty, new FrameTracker)
+    override def runFrom(events: DataFrame, stored: Map[String, DataFrame],
+                         tracker: FrameTracker) = tables(stored)
+  }
+
+  test("a failing sink is rethrown after every started write ends; its dependents never run") {
+    val wh = tmp("graft-fail-wh")
+    val slowRow = udf((id: Long) => { Thread.sleep(2000); id })
+    val slow = stub("slow")(_ => Seq("slow_out" -> spark.range(1).select(slowRow(col("id")).as("id"))))
+    val bad = stub("bad")(_ => Seq("bad_out" -> spark.range(3)
+      .select(col("id"), assert_true(col("id") < 0, lit("sink boom")).isNull.as("ok"))))
+    val ranDependent = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val after = stub("after_bad", Set("bad")) { _ => ranDependent.set(true); Nil }
+    val ex = intercept[Throwable](Pipeline.run(spark, smallLogs, wh, Seq(slow, bad, after)))
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(ex).exists(_.contains("sink boom")), s"unexpected failure: $ex")
+    assert(new java.io.File(s"$wh/slow_out/_SUCCESS").exists,
+      "Pipeline.run returned while the slow sink was still writing")
+    assert(!ranDependent.get, "an analytic ran although its dependency failed")
+  }
+
+  test("a dependsOn analytic receives its dependency's stored table") {
+    val wh = tmp("graft-dep-wh")
+    var seen = Map.empty[String, DataFrame]
+    val first = stub("first")(_ => Seq("first_out" -> spark.range(5).toDF("id")))
+    val second = stub("second", Set("first")) { stored =>
+      seen = stored
+      Seq("second_out" -> stored("first_out").withColumn("twice", col("id") * 2))
+    }
+    val counts = Pipeline.run(spark, smallLogs, wh, Seq(second, first))
+    assert(seen.keySet == Set("first_out"))
+    assert(seen("first_out").inputFiles.forall(_.contains("first_out")))
+    assert(counts("first_out") == 5L && counts("second_out") == 5L)
+  }
+
+  test("two concurrent Pipeline.runs in one session each count their own tables") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val runs = Seq(2, 3).map { h =>
+      val logs = tmp(s"graft-conc-logs-$h")
+      Fixtures.writeScenario(logs, heights = h)
+      val wh = tmp(s"graft-conc-wh-$h")
+      wh -> Future(Pipeline.run(spark, logs, wh))
+    }
+    val results = runs.map { case (wh, f) => wh -> Await.result(f, 10.minutes) }
+    results.foreach { case (wh, counts) =>
+      assert(counts.size == 16)
+      counts.foreach { case (tbl, n) =>
+        val stored = spark.read.parquet(s"$wh/$tbl").count()
+        assert(n == stored, s"$wh/$tbl: returned $n, stored $stored")
+      }
+    }
+    assert(results(0)._2("events") < results(1)._2("events"))
   }
 }
