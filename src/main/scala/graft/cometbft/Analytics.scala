@@ -153,56 +153,63 @@ object Analytics {
     * faithful machine ([[PairingJoin.confirmEitherOrder]]): receives
     * confirm against the last send before them, the first send confirms a
     * pending first receive (negative latency), repeat receives re-confirm
-    * — exactly the reference's per-key entry semantics. Key builders
-    * mirror `processor.go:343-366`. */
+    * — exactly the reference's per-key entry semantics. The family is a
+    * column value: all 8 run through one machine call keyed by
+    * (msg_family, key, sender, receiver), [[sides]] building the key. */
   object P2pMessages extends Analytic {
     val name = "p2p_messages"
 
-    private case class Family(family: String, keys: Seq[(String, Column)])
-    private val families = Seq(
-      Family("vote", Seq(
-        "height" -> col("vote.height"), "round" -> col("vote.round"),
-        "vote_type" -> col("vote.voteType"), "val_idx" -> col("vote.validatorIndex"))),
-      Family("block_part", Seq(
-        "height" -> col("decoded.height"), "round" -> col("decoded.round"),
-        "part_hash" -> sha2(col("decoded.partBytesHex"), 256))),
-      Family("proposal", Seq(
-        "height" -> col("proposal.height"), "round" -> col("proposal.round"),
-        "block_hash" -> col("proposal.blockHash"))),
-      Family("proposal_pol", Seq(
-        "height" -> col("decoded.height"), "pol_round" -> col("decoded.proposalPolRound"))),
-      Family("new_round_step", Seq(
-        "height" -> col("decoded.height"), "round" -> col("decoded.round"),
-        "step" -> col("decoded.step"))),
-      Family("has_vote", Seq(
-        "height" -> col("decoded.height"), "round" -> col("decoded.round"),
-        "vote_type" -> col("decoded.step"), "idx" -> col("decoded.index"))),
-      Family("vote_set_maj23", Seq(
-        "height" -> col("decoded.height"), "round" -> col("decoded.round"),
-        "vote_type" -> col("decoded.step"), "block_hash" -> col("decoded.blockIdHash"))),
-      Family("vote_set_bits", Seq(
-        "height" -> col("decoded.height"), "round" -> col("decoded.round"),
-        "vote_type" -> col("decoded.step"), "block_hash" -> col("decoded.blockIdHash"))))
+    /** The 8 families and the columns of each one's confirmation key,
+      * height first (`processor.go:343-366`). */
+    private val families: Seq[(String, Seq[Column])] = Seq(
+      "vote" -> Seq(col("vote.height"), col("vote.round"),
+        col("vote.voteType"), col("vote.validatorIndex")),
+      "block_part" -> Seq(col("decoded.height"), col("decoded.round"),
+        sha2(col("decoded.partBytesHex"), 256)),
+      "proposal" -> Seq(col("proposal.height"), col("proposal.round"),
+        col("proposal.blockHash")),
+      "proposal_pol" -> Seq(col("decoded.height"), col("decoded.proposalPolRound")),
+      "new_round_step" -> Seq(col("decoded.height"), col("decoded.round"), col("decoded.step")),
+      "has_vote" -> Seq(col("decoded.height"), col("decoded.round"),
+        col("decoded.step"), col("decoded.index")),
+      "vote_set_maj23" -> Seq(col("decoded.height"), col("decoded.round"),
+        col("decoded.step"), col("decoded.blockIdHash")),
+      "vote_set_bits" -> Seq(col("decoded.height"), col("decoded.round"),
+        col("decoded.step"), col("decoded.blockIdHash")))
+
+    /** Every send and receive of the 8 families as one tagged row:
+      * msg_family, key (the family's key columns as strings, in order — an
+      * array keeps the position of each null), sender, receiver, side
+      * ("send" or "recv") and ts_ns. Shared by the batch analytic and
+      * [[graft.streaming.StreamingPipeline.p2pConfirmStream]]. */
+    def sides(events: DataFrame): DataFrame = {
+      val fam = col("msg_family")
+      val isSend = col("event_type").startsWith("send_")
+      val key = coalesce(families.map { case (f, keys) =>
+        when(fam === f, array(keys.map(_.cast("string")): _*))
+      }: _*)
+      events
+        .filter(col("event_type").isin(
+          families.flatMap { case (f, _) => Seq(s"send_$f", s"receive_packet_$f") }: _*))
+        .withColumn("msg_family", regexp_replace(col("event_type"), "^(send|receive_packet)_", ""))
+        .select(fam, key.as("key"),
+          when(isSend, col("node_id")).otherwise(col("source_peer_id")).as("sender"),
+          when(isSend, col("recipient_peer_id")).otherwise(col("node_id")).as("receiver"),
+          when(isSend, "send").otherwise("recv").as("side"),
+          col("ts_ns"))
+    }
 
     def run(events: DataFrame): Seq[(String, DataFrame)] = {
-      val confirmed = families.map { f =>
-        val keyNames = f.keys.map(_._1)
-        val sends = events.filter(col("event_type") === s"send_${f.family}")
-          .select(f.keys.map { case (n, c) => c.cast("string").as(n) } ++ Seq(
-            col("node_id").as("sender"), col("recipient_peer_id").as("receiver"),
-            col("ts_ns").as("sent_ns")): _*)
-        val recvs = events.filter(col("event_type") === s"receive_packet_${f.family}")
-          .select(f.keys.map { case (n, c) => c.cast("string").as(n) } ++ Seq(
-            col("source_peer_id").as("sender"), col("node_id").as("receiver"),
-            col("ts_ns").as("received_ns")): _*)
-        PairingJoin.confirmEitherOrder(sends, recvs,
-            keyNames ++ Seq("sender", "receiver"), "sent_ns", "received_ns")
-          .withColumn("msg_family", lit(f.family))
-          .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))
-          .select("msg_family", "sender", "receiver", "height",
-            "sent_ns", "received_ns", "latency_ms")
-      }
-      Seq("p2p_messages" -> confirmed.reduce(_.unionByName(_)))
+      val s = sides(events)
+      val confirmed = PairingJoin.confirmEitherOrder(
+          s.filter(col("side") === "send").withColumnRenamed("ts_ns", "sent_ns"),
+          s.filter(col("side") === "recv").withColumnRenamed("ts_ns", "received_ns"),
+          Seq("msg_family", "key", "sender", "receiver"), "sent_ns", "received_ns")
+        .withColumn("height", col("key")(0))
+        .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))
+        .select("msg_family", "sender", "receiver", "height",
+          "sent_ns", "received_ns", "latency_ms")
+      Seq(name -> confirmed)
     }
   }
 

@@ -8,25 +8,18 @@ import graft.cometbft.Parsers._
   * parsed raw lines → one wide normalized events DataFrame, tagged by
   * `event_type`, with nullable per-family columns.
   *
+  * Like the reference's single switch on the message type (`Convert`,
+  * `convereter.go:102-133`), [[normalize]] is one projection over the
+  * lines: the family is a column value, not a separate plan branch, so
+  * the log text is read once.
+  *
   * Event-type tags are our canonical snake_case names (the reference's
   * constants live in an un-vendored external module; documented deviation).
-  *
-  * Families produced (mirroring `Convert`, `convereter.go:102-133`):
-  *   - entering_new_round, entering_{prevote,precommit,commit}_step
-  *     (propose dropped per P3, `convereter.go:107-110`; wait-step lines
-  *     collapse into prevote/precommit per the reference's first-match
-  *     inference, `parsers.go:94-128` — see stepNames below)
-  *   - propose_step (is_our_turn from the two ProposeStep messages)
-  *   - received_proposal (F4 string grammar), received_complete_proposal_block
-  *   - committed_block (F6 block grammar), scheduled_timeout (F17 duration)
-  *   - send_* / receive_packet_* ×10 (F12-F16: hex/base64 decode → proto
-  *     wire decode → channel validation P4 → per-type projection)
   */
 object Normalize {
 
   // ---------------------------------------------------------------- UDFs
   private val tsNanosU     = udf((s: String) => Option(parseTsNanos(s)).map(_.toLong))
-  private val voteU        = udf((s: String) => parseVoteString(s))
   private val proposalU    = udf((s: String) => parseProposalString(s))
   private val blockU       = udf((s: String) => parseBlockString(s))
   private val durationMsU  = udf((s: String) => Option(parseGoDurationMs(s)).map(_.toLong))
@@ -187,145 +180,130 @@ object Normalize {
     }
   }
 
+  /** `lib/parse.go:15-37` ([[Parsers.parseRoundInfo]]) over a column: a
+    * (height, round, step) struct for `height/round/step` with exactly
+    * three parts, the first two unsigned decimals that fit a long, the
+    * third a known step name; null for any other string, so nothing here
+    * throws under ANSI mode. */
+  private def roundInfo(c: Column): Column = {
+    val parts = split(c, "/")
+    def part(i: Int) = try_element_at(parts, lit(i))
+    def uint(i: Int) = when(part(i).rlike("^\\+?[0-9]+$"), part(i).try_cast("long"))
+    val (h, r, s) = (uint(1), uint(2), formatStepCol(part(3)))
+    when(size(parts) === 3 && h.isNotNull && r.isNotNull && s.isNotNull,
+      struct(h.as("height"), r.as("round"), s.as("step")))
+  }
+
   // ------------------------------------------------------------ normalize
-  /** Full normalization: LogIngest.read output → wide events DataFrame. */
+  /** The lower-cased `_msg` of each converted line and its family: the
+    * event_type of a consensus line (`convereter.go:102-133`; "entering
+    * propose step" is absent, P3, `:107-110`), the event_type prefix of a
+    * p2p line, which its decoded message type completes (F12-F16).
+    *
+    * REPLICATED REFERENCE BEHAVIOR (`parsers.go:94-128`): the reference
+    * infers targetStep by first-match substring scan over the ordered list
+    * [propose, prevote, prevote_wait, precommit, precommit_wait, commit]
+    * and BREAKS on the first hit — "entering prevote wait step" contains
+    * "prevote", so targetStep = "prevote"; likewise precommit wait →
+    * "precommit". The prevote_wait / precommit_wait cases of
+    * ConvertToSpecificStepEvent (`convereter.go:179-190`) are therefore
+    * dead code: the reference binary NEVER emits wait-step events, and in
+    * consensus-timing the wait line's timestamp OVERWRITES the
+    * prevote/precommit slot (last-one-wins map, `processor.go:84`). We
+    * replicate that exactly — wait-step log lines are tagged with the
+    * non-wait event type (SURVEY §7.4-3). The event's step fields still
+    * come from the line's own `current` round-info, as in the reference. */
+  private val families: Seq[(String, String)] = Seq(
+    "entering new round"                    -> "entering_new_round",
+    "entering prevote step"                 -> "entering_prevote_step",
+    "entering prevote wait step"            -> "entering_prevote_step",
+    "entering precommit step"               -> "entering_precommit_step",
+    "entering precommit wait step"          -> "entering_precommit_step",
+    "entering commit step"                  -> "entering_commit_step",
+    "propose step; our turn to propose"     -> "propose_step",
+    "propose step; not our turn to propose" -> "propose_step",
+    "received proposal"                     -> "received_proposal",
+    "received complete proposal block"      -> "received_complete_proposal_block",
+    "committed block"                       -> "committed_block",
+    "scheduled timeout"                     -> "scheduled_timeout",
+    "send"                                  -> "send_",
+    "trysend"                               -> "send_",
+    "received bytes"                        -> "receive_packet_")
+
+  /** Full normalization: LogIngest.read output → wide events DataFrame.
+    *
+    * One projection over the dispatched lines: a CASE on `msg_lc` tags each
+    * line with its family, each family's columns and parser UDF sit inside
+    * a `when` on that family, one filter applies each family's validity
+    * rule, and the final `select` fixes the column order. Validity:
+    *   - entering_new_round (`convereter.go:135-154`) needs a well-formed
+    *     `previous`, the steps (`:156-230`) a well-formed `current`;
+    *   - received_proposal (`:266-281`, F4) needs a parsed proposal;
+    *   - send_* / receive_packet_* ×10 (F12-F16: hex or base64 → proto
+    *     wire decode) need a decoded message that matches its channel (P4);
+    *   - propose_step, received_complete_proposal_block, committed_block
+    *     (F6) and scheduled_timeout (F17) always pass. */
   def normalize(raw: DataFrame): DataFrame = {
-    val base = raw
-      .withColumn("ts_ns", tsNanosU(col("r.ts")))
-      .filter(col("ts_ns").isNotNull)
-      .withColumn("ts", timestamp_micros(expr("ts_ns div 1000")))
-
-    def withBase(df: DataFrame, eventType: Column): DataFrame =
-      df.withColumn("event_type", eventType)
-        .select(
-          (Seq("event_type", "ts", "ts_ns", "node_id", "validator_address", "src_file")
-            .map(col) ++
-            df.columns.filterNot(Seq("event_type", "ts", "ts_ns", "node_id",
-              "validator_address", "src_file", "value", "msg_raw", "msg_lc", "r",
-              "ch_id", "node_id_raw", "validator_addr_raw").contains).map(col)): _*)
-
-    // --- entering_new_round (convereter.go:135-154)
-    val enr = withBase(
-      base.filter(col("msg_lc") === "entering new round")
-        .withColumn("prev_parts", split(col("r.previous"), "/"))
-        .withColumn("height", col("r.height"))
-        .withColumn("round", col("r.round"))
-        .withColumn("proposer", col("r.proposer"))
-        .withColumn("prev_height", element_at(col("prev_parts"), 1).cast("long"))
-        .withColumn("prev_round", element_at(col("prev_parts"), 2).cast("long"))
-        .withColumn("prev_step", formatStepCol(element_at(col("prev_parts"), 3)))
-        .filter(col("prev_height").isNotNull && col("prev_round").isNotNull &&
-          col("prev_step").isNotNull)
-        .drop("prev_parts"),
-      lit("entering_new_round"))
-
-    // --- entering_*_step (convereter.go:156-230; S5 step inference from _msg)
-    //
-    // REPLICATED REFERENCE BEHAVIOR (`parsers.go:94-128`): the reference
-    // infers targetStep by first-match substring scan over the ordered list
-    // [propose, prevote, prevote_wait, precommit, precommit_wait, commit]
-    // and BREAKS on the first hit — "entering prevote wait step" contains
-    // "prevote", so targetStep = "prevote"; likewise precommit wait →
-    // "precommit". The prevote_wait / precommit_wait cases of
-    // ConvertToSpecificStepEvent (`convereter.go:179-190`) are therefore
-    // dead code: the reference binary NEVER emits wait-step events, and in
-    // consensus-timing the wait line's timestamp OVERWRITES the
-    // prevote/precommit slot (last-one-wins map, `processor.go:84`). We
-    // replicate that exactly — wait-step log lines are tagged with the
-    // non-wait event type (SURVEY §7.4-3). The event's curr_* fields still
-    // come from the line's own `current` round-info, as in the reference.
-    val stepNames = Seq(
-      "entering prevote step"        -> "entering_prevote_step",
-      "entering prevote wait step"   -> "entering_prevote_step",
-      "entering precommit step"      -> "entering_precommit_step",
-      "entering precommit wait step" -> "entering_precommit_step",
-      "entering commit step"         -> "entering_commit_step")
-    val stepTag = stepNames.foldLeft(when(lit(false), lit(null: String))) {
+    val family = families.foldLeft(when(lit(false), lit(null: String))) {
       case (acc, (m, t)) => acc.when(col("msg_lc") === m, t)
     }
-    val steps = withBase(
-      base.filter(col("msg_lc").isin(stepNames.map(_._1): _*))
-        .withColumn("curr_parts", split(col("r.current"), "/"))
-        .withColumn("height", element_at(col("curr_parts"), 1).cast("long"))
-        .withColumn("round", element_at(col("curr_parts"), 2).cast("long"))
-        .withColumn("step", formatStepCol(element_at(col("curr_parts"), 3)))
-        .filter(col("height").isNotNull && col("round").isNotNull && col("step").isNotNull)
-        .drop("curr_parts"),
-      stepTag)
+    val fam = col("family")
+    def on(fams: String*)(c: Column): Column = when(fam.isin(fams: _*), c)
+    val isSend = fam === "send_"
+    val isRecv = fam === "receive_packet_"
+    val isP2p  = isSend || isRecv
+    val steps  = Seq("entering_prevote_step", "entering_precommit_step", "entering_commit_step")
 
-    // --- propose_step (convereter.go:232-264)
-    val propose = withBase(
-      base.filter(col("msg_lc").isin(
-          "propose step; our turn to propose", "propose step; not our turn to propose"))
-        .withColumn("height", col("r.height"))
-        .withColumn("round", col("r.round"))
-        .withColumn("proposer", col("r.proposer"))
-        .withColumn("is_our_turn", col("msg_lc") === "propose step; our turn to propose"),
-      lit("propose_step"))
-
-    // --- received_proposal (convereter.go:266-281)
-    val rp = withBase(
-      base.filter(col("msg_lc") === "received proposal")
-        .withColumn("proposal", proposalU(col("r.proposal")))
-        .filter(col("proposal").isNotNull)
-        .withColumn("proposer", col("r.proposer"))
-        .withColumn("height", col("proposal.height"))
-        .withColumn("round", col("proposal.round")),
-      lit("received_proposal"))
-
-    // --- received_complete_proposal_block (convereter.go:283-294)
-    val rcpb = withBase(
-      base.filter(col("msg_lc") === "received complete proposal block")
-        .withColumn("hash", col("r.hash"))
-        .withColumn("height", col("r.height")),
-      lit("received_complete_proposal_block"))
-
-    // --- committed_block (convereter.go tail, F6)
-    val cb = withBase(
-      base.filter(col("msg_lc") === "committed block")
-        .withColumn("block", blockU(col("r.block")))
-        .withColumn("height", col("r.height")),
-      lit("committed_block"))
-
-    // --- scheduled_timeout (F17)
-    val st = withBase(
-      base.filter(col("msg_lc") === "scheduled timeout")
-        .withColumn("height", col("r.height"))
-        .withColumn("round", col("r.round"))
-        .withColumn("timeout_step", col("r.step"))
-        .withColumn("duration_ms", durationMsU(col("r.dur"))),
-      lit("scheduled_timeout"))
-
-    // --- send_* / receive_packet_* (F12-F16, P4)
-    val sends = base
-      .filter(col("msg_lc").isin("send", "trysend"))
-      .withColumn("channel", col("r.channel"))
-      .withColumn("channel_name", channelName(col("r.channel")))
-      .withColumn("msg_bytes", unhex(col("r.msgBytes")))
-      .withColumn("decoded", decodeU(col("channel").cast("long"), col("msg_bytes")))
-      .filter(col("decoded").isNotNull)
-      .filter(channelValid(col("decoded.msgType"), col("channel")))
-      .withColumn("recipient_peer", col("r.peer"))
-      .withColumn("recipient_peer_id", peerIdCol(col("r.peer")))
-      .withColumn("vote", col("decoded.vote"))
-      .withColumn("proposal", col("decoded.proposal"))
-    val sendsTagged = withBase(sends, concat(lit("send_"), col("decoded.msgType")))
-
-    val recvs = base
-      .filter(col("msg_lc") === "received bytes")
-      .withColumn("channel", col("ch_id"))
-      .withColumn("channel_name", channelName(col("ch_id")))
-      .withColumn("msg_bytes", unbase64(col("r.msgBytes")))
-      .withColumn("decoded", decodeU(col("channel").cast("long"), col("msg_bytes")))
-      .filter(col("decoded").isNotNull)
-      .filter(channelValid(col("decoded.msgType"), col("channel")))
-      .withColumn("source_peer", col("r.peer"))
-      .withColumn("source_peer_id", peerIdCol(col("r.peer")))
-      .withColumn("vote", col("decoded.vote"))
-      .withColumn("proposal", col("decoded.proposal"))
-    val recvsTagged = withBase(recvs, concat(lit("receive_packet_"), col("decoded.msgType")))
-
-    Seq(enr, steps, propose, rp, rcpb, cb, st, sendsTagged, recvsTagged)
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    raw
+      .withColumn("family", family)
+      .filter(fam.isNotNull)
+      .withColumn("ts_ns", tsNanosU(col("r.ts")))
+      .filter(col("ts_ns").isNotNull)
+      .select(col("*"),
+        on("entering_new_round")(roundInfo(col("r.previous"))).as("prev"),
+        on(steps: _*)(roundInfo(col("r.current"))).as("curr"),
+        on("received_proposal")(proposalU(col("r.proposal"))).as("rp"),
+        when(isSend, col("r.channel")).when(isRecv, col("ch_id")).as("channel"),
+        when(isSend, unhex(col("r.msgBytes"))).when(isRecv, unbase64(col("r.msgBytes")))
+          .as("msg_bytes"))
+      .withColumn("decoded", when(isP2p, decodeU(col("channel"), col("msg_bytes"))))
+      .filter(
+        when(fam === "entering_new_round", col("prev").isNotNull)
+          .when(fam.isin(steps: _*), col("curr").isNotNull)
+          .when(fam === "received_proposal", col("rp").isNotNull)
+          .when(isP2p, col("decoded").isNotNull &&
+            channelValid(col("decoded.msgType"), col("channel")))
+          .otherwise(lit(true)))
+      .select(
+        when(isP2p, concat(fam, col("decoded.msgType"))).otherwise(fam).as("event_type"),
+        timestamp_micros(expr("ts_ns div 1000")).as("ts"),
+        col("ts_ns"), col("node_id"), col("validator_address"), col("src_file"),
+        when(fam.isin(steps: _*), col("curr.height"))
+          .when(fam === "received_proposal", col("rp.height"))
+          .when(!isP2p, col("r.height")).as("height"),
+        when(fam.isin(steps: _*), col("curr.round"))
+          .when(fam === "received_proposal", col("rp.round"))
+          .when(fam.isin("entering_new_round", "propose_step", "scheduled_timeout"),
+            col("r.round")).as("round"),
+        on("entering_new_round", "propose_step", "received_proposal")(col("r.proposer"))
+          .as("proposer"),
+        col("prev.height").as("prev_height"), col("prev.round").as("prev_round"),
+        col("prev.step").as("prev_step"),
+        col("curr.step").as("step"),
+        on("propose_step")(col("msg_lc") === "propose step; our turn to propose")
+          .as("is_our_turn"),
+        coalesce(col("rp"), col("decoded.proposal")).as("proposal"),
+        on("received_complete_proposal_block")(col("r.hash")).as("hash"),
+        on("committed_block")(blockU(col("r.block"))).as("block"),
+        on("scheduled_timeout")(col("r.step")).as("timeout_step"),
+        on("scheduled_timeout")(durationMsU(col("r.dur"))).as("duration_ms"),
+        col("channel"),
+        when(isP2p, channelName(col("channel"))).as("channel_name"),
+        col("msg_bytes"), col("decoded"),
+        when(isSend, col("r.peer")).as("recipient_peer"),
+        when(isSend, peerIdCol(col("r.peer"))).as("recipient_peer_id"),
+        col("decoded.vote").as("vote"),
+        when(isRecv, col("r.peer")).as("source_peer"),
+        when(isRecv, peerIdCol(col("r.peer"))).as("source_peer_id"))
   }
 }

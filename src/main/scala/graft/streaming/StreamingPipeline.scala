@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.cometbft.{LogIngest, Normalize}
+import graft.cometbft.{Analytics, LogIngest, Normalize}
 
 /** Streaming mode (SURVEY.md §2.9): the reference is batch, but its plugin
   * state machines are stateful streaming operators in disguise. This module
@@ -128,7 +128,7 @@ object StreamingPipeline {
         })
   }
 
-  final case class P2pSide(family: String, keyStr: String, sender: String,
+  final case class P2pSide(family: String, key: Seq[String], sender: String,
                            receiver: String, height: Long, side: String, tsNs: Long)
   final case class P2pConfirmed(msgFamily: String, sender: String, receiver: String,
                                 height: Long, sentNs: Option[Long], receivedNs: Long,
@@ -139,8 +139,9 @@ object StreamingPipeline {
   /** Streaming J3: the either-order confirmation machine of the p2p
     * processor (`p2p-messages/processor.go:78-110`), all 8 families in one
     * stateful operator keyed by (family, type-specific key, sender,
-    * receiver) — the state analysis behind
-    * [[graft.operators.PairingJoin.confirmEitherOrder]] replayed as keyed
+    * receiver) over the batch analytic's tagged sides
+    * ([[graft.cometbft.Analytics.P2pMessages.sides]]) — the state analysis
+    * behind [[graft.operators.PairingJoin.confirmEitherOrder]] replayed as keyed
     * state: every receive with a prior send confirms against the LAST send
     * before it; a receive whose priors are only receives confirms with a
     * NULL sent time (the reference's rationalized nil-assertion panic);
@@ -149,44 +150,18 @@ object StreamingPipeline {
   def p2pConfirmStream(spark: SparkSession, ev: DataFrame,
                        stateTimeout: Option[String] = None): Dataset[P2pConfirmed] = {
     import spark.implicits._
-    val families: Seq[(String, Seq[org.apache.spark.sql.Column])] = Seq(
-      "vote" -> Seq(col("vote.height"), col("vote.round"),
-        col("vote.voteType"), col("vote.validatorIndex")),
-      "block_part" -> Seq(col("decoded.height"), col("decoded.round"),
-        sha2(col("decoded.partBytesHex"), 256)),
-      "proposal" -> Seq(col("proposal.height"), col("proposal.round"),
-        col("proposal.blockHash")),
-      "proposal_pol" -> Seq(col("decoded.height"), col("decoded.proposalPolRound")),
-      "new_round_step" -> Seq(col("decoded.height"), col("decoded.round"), col("decoded.step")),
-      "has_vote" -> Seq(col("decoded.height"), col("decoded.round"),
-        col("decoded.step"), col("decoded.index")),
-      "vote_set_maj23" -> Seq(col("decoded.height"), col("decoded.round"),
-        col("decoded.step"), col("decoded.blockIdHash")),
-      "vote_set_bits" -> Seq(col("decoded.height"), col("decoded.round"),
-        col("decoded.step"), col("decoded.blockIdHash")))
-    val height = Seq("vote" -> col("vote.height"), "proposal" -> col("proposal.height"))
-      .toMap.withDefaultValue(col("decoded.height"))
-    val sides = families.map { case (fam, keyCols) =>
-      val keyStr = concat_ws("|", keyCols.map(_.cast("string")): _*)
-      ev.filter(col("event_type").isin(s"send_$fam", s"receive_packet_$fam"))
-        .select(
-          lit(fam).as("family"), keyStr.as("keyStr"),
-          when(col("event_type") === s"send_$fam", col("node_id"))
-            .otherwise(col("source_peer_id")).as("sender"),
-          when(col("event_type") === s"send_$fam", col("recipient_peer_id"))
-            .otherwise(col("node_id")).as("receiver"),
-          height(fam).cast("long").as("height"),
-          when(col("event_type") === s"send_$fam", "send").otherwise("recv").as("side"),
-          col("ts_ns").as("tsNs"))
-    }.reduce(_.unionByName(_)).as[P2pSide]
+    val sides = Analytics.P2pMessages.sides(ev)
+      .select(col("msg_family").as("family"), col("key"), col("sender"), col("receiver"),
+        col("key")(0).cast("long").as("height"), col("side"), col("ts_ns").as("tsNs"))
+      .as[P2pSide]
 
     val timeoutConf =
       if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
       else GroupStateTimeout.NoTimeout()
     sides
-      .groupByKey(v => (v.family, v.keyStr, v.sender, v.receiver, v.height))
+      .groupByKey(v => (v.family, v.key, v.sender, v.receiver, v.height))
       .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        (key: (String, String, String, String, Long), rows: Iterator[P2pSide],
+        (key: (String, Seq[String], String, String, Long), rows: Iterator[P2pSide],
          state: GroupState[P2pState]) => {
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {

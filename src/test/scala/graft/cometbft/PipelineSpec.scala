@@ -3,6 +3,9 @@ package graft.cometbft
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * The acceptance scenario mirrors the reference's example-logs: node0 is
   * configured slow (10x step latencies) and the consensus_timing output
   * must expose it. */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -19,11 +22,15 @@ class PipelineSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private lazy val warehouse: String = {
+  private lazy val logs5: String = {
     val logDir = java.nio.file.Files.createTempDirectory("graft-logs").toString
-    val wh     = java.nio.file.Files.createTempDirectory("graft-wh").toString
     Fixtures.writeScenario(logDir, heights = 5)
-    Pipeline.run(spark, logDir, wh)
+    logDir
+  }
+
+  private lazy val warehouse: String = {
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
+    Pipeline.run(spark, logs5, wh)
     wh
   }
 
@@ -42,6 +49,102 @@ class PipelineSpec extends AnyFunSuite {
       val stored = spark.read.parquet(s"$wh/$tbl").count()
       assert(n == stored, s"$tbl: returned $n, stored $stored")
     }
+  }
+
+  // The `events` table as Normalize builds it from the 5-height fixture:
+  // its exact schema (names, order, types, nullability) and an
+  // order-independent fingerprint of every row and column, so a change to
+  // how the table is built cannot drift a column that no other test reads.
+  // `src_file` enters the hash by file name, not by its temp-dir path.
+  private val eventsDdl = Seq(
+    "event_type STRING", "ts TIMESTAMP", "ts_ns BIGINT", "node_id STRING",
+    "validator_address STRING", "src_file STRING NOT NULL", "height BIGINT", "round BIGINT",
+    "proposer STRING", "prev_height BIGINT", "prev_round BIGINT", "prev_step STRING",
+    "step STRING", "is_our_turn BOOLEAN",
+    "proposal STRUCT<height: BIGINT NOT NULL, round: BIGINT NOT NULL, " +
+      "polRound: BIGINT NOT NULL, blockHash: STRING, psTotal: BIGINT NOT NULL, " +
+      "psHash: STRING, signature: STRING, tsNs: BIGINT NOT NULL>",
+    "hash STRING",
+    "block STRUCT<chainId: STRING, height: BIGINT NOT NULL, timeNs: BIGINT NOT NULL, " +
+      "versionBlock: BIGINT NOT NULL, versionApp: BIGINT NOT NULL, lastBlockIdHash: STRING, " +
+      "lastCommitHash: STRING, dataHash: STRING, validatorsHash: STRING, " +
+      "nextValidatorsHash: STRING, consensusHash: STRING, appHash: STRING, " +
+      "lastResultsHash: STRING, evidenceHash: STRING, proposerAddress: STRING, " +
+      "txsHex: ARRAY<STRING>, commitHeight: BIGINT NOT NULL, commitRound: BIGINT NOT NULL, " +
+      "commitBlockIdHash: STRING, signatures: ARRAY<STRUCT<flag: STRING, " +
+      "validatorAddress: STRING, signature: STRING, tsNs: BIGINT NOT NULL>>, blockHash: STRING>",
+    "timeout_step STRING", "duration_ms BIGINT", "channel BIGINT", "channel_name STRING",
+    "msg_bytes BINARY",
+    "decoded STRUCT<msgType: STRING, height: BIGINT, round: BIGINT, step: STRING, " +
+      "index: BIGINT, secondsSinceStartTime: BIGINT, lastCommitRound: BIGINT, " +
+      "isCommit: BOOLEAN, proposalPolRound: BIGINT, blockIdHash: STRING, psTotal: BIGINT, " +
+      "psHash: STRING, bitsTotal: BIGINT, bitsElems: ARRAY<BIGINT>, partIndex: BIGINT, " +
+      "partBytesHex: STRING, vote: STRUCT<voteType: STRING, height: BIGINT NOT NULL, " +
+      "round: BIGINT NOT NULL, blockHash: STRING, psHash: STRING, psTotal: BIGINT NOT NULL, " +
+      "tsNs: BIGINT NOT NULL, validatorAddress: STRING, validatorIndex: BIGINT NOT NULL, " +
+      "signature: STRING, extension: STRING>, proposal: STRUCT<height: BIGINT NOT NULL, " +
+      "round: BIGINT NOT NULL, polRound: BIGINT NOT NULL, blockHash: STRING, " +
+      "psTotal: BIGINT NOT NULL, psHash: STRING, signature: STRING, tsNs: BIGINT NOT NULL>>",
+    "recipient_peer STRING", "recipient_peer_id STRING",
+    "vote STRUCT<voteType: STRING, height: BIGINT NOT NULL, round: BIGINT NOT NULL, " +
+      "blockHash: STRING, psHash: STRING, psTotal: BIGINT NOT NULL, tsNs: BIGINT NOT NULL, " +
+      "validatorAddress: STRING, validatorIndex: BIGINT NOT NULL, signature: STRING, " +
+      "extension: STRING>",
+    "source_peer STRING", "source_peer_id STRING").mkString(",")
+
+  test("events schema and content are pinned on the 5-height fixture") {
+    val events = Normalize.normalize(LogIngest.read(spark, logs5))
+    assert(events.schema.toDDL == eventsDdl)
+    val hashed = events.columns.map {
+      case "src_file" => regexp_extract(col("src_file"), "[^/]+$", 0)
+      case c          => col(c)
+    }
+    val fp = events.agg(count(lit(1)), sum(xxhash64(hashed: _*).cast("decimal(38,0)")))
+      .collect().head
+    assert((fp.getLong(0), fp.getDecimal(1).toString) == ((644L, "-49671817533489366522")))
+  }
+
+  test("normalize scans the log text twice: once for rows, once for the P7 metadata") {
+    val plan = Normalize.normalize(LogIngest.read(spark, logs5)).queryExecution.executedPlan
+    assert(collect(plan) { case s: FileSourceScanExec => s }.size == 2)
+  }
+
+  test("p2p_messages confirms all 8 families in one machine pass") {
+    val events = Normalize.normalize(LogIngest.read(spark, logs5))
+    val plan = Analytics.P2pMessages.run(events).head._2.queryExecution.executedPlan
+    // one machine per family planned 48 Window operators
+    assert(collect(plan) { case w: WindowExec => w }.size <= 6)
+  }
+
+  test("malformed round-info strings drop their line; the run and the valid lines go on") {
+    def ts(i: Int) = f"2025-06-09T00:00:00.$i%09dZ"
+    def newRound(i: Int, previous: String) =
+      s"""{"_msg":"Entering new round","ts":"${ts(i)}","current":"3/0/RoundStepNewHeight","previous":"$previous","proposer":"P","height":3,"round":0}"""
+    def prevote(i: Int, current: String) =
+      s"""{"_msg":"Entering prevote step","ts":"${ts(i)}","current":"$current","height":3,"round":0}"""
+    val malformed = Seq(
+      newRound(1, "x/0/RoundStepCommit"), newRound(2, "2/0"),
+      newRound(3, "2/0/RoundStepCommit/z"), newRound(4, "-2/0/RoundStepCommit"),
+      prevote(5, "3/x/RoundStepPrevote"), prevote(6, "3"))
+    Seq("x/0/RoundStepCommit", "2/0", "2/0/RoundStepCommit/z", "-2/0/RoundStepCommit",
+      "3/x/RoundStepPrevote", "3").foreach(s => assert(Parsers.parseRoundInfo(s).isEmpty, s))
+    val valid = Seq(newRound(7, "2/0/RoundStepCommit"), prevote(8, "3/0/RoundStepPrevote"))
+    val logs = tmp("graft-roundinfo-logs")
+    Fixtures.writeScenario(logs, heights = 2)
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$logs/node1_cometbft.log"),
+      ("\n" + (malformed ++ valid).mkString("\n")).getBytes("UTF-8"),
+      java.nio.file.StandardOpenOption.APPEND)
+    val wh = tmp("graft-roundinfo-wh")
+    Pipeline.run(spark, logs, wh)
+    val added = spark.read.parquet(s"$wh/events")
+      .filter(col("ts") >= lit("2025-06-09").cast("timestamp"))
+      .select("ts_ns", "event_type", "height", "round", "prev_height", "prev_round",
+        "prev_step", "step")
+      .collect().map(r => (0 until r.length).map(r.get)).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val day = java.time.Instant.parse("2025-06-09T00:00:00Z").getEpochSecond * 1000000000L
+    assert(added == Seq(
+      Seq(day + 7, "entering_new_round", 3L, 0L, 2L, 0L, "commit", null),
+      Seq(day + 8, "entering_prevote_step", 3L, 0L, null, null, null, "prevote")))
   }
 
   test("events are produced for every family") {

@@ -117,6 +117,11 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(key).sorted
       assert(streamed.nonEmpty, "no p2p confirmations from the stream")
       assert(streamed.map(_._1).distinct.size == 8, "expected all 8 families confirmed")
+      // one tagged projection, not a branch per family: the source reads
+      // each log line once
+      val lines = new java.io.File(logDir).listFiles.filter(_.getName.endsWith(".log"))
+        .map(f => java.nio.file.Files.readAllLines(f.toPath).size.toLong).sum
+      assert(q.recentProgress.map(_.numInputRows).sum == lines)
       val batchEvents = graft.cometbft.Normalize.normalize(
         graft.cometbft.LogIngest.read(spark, logDir))
       val batch = graft.cometbft.Analytics.P2pMessages.run(batchEvents).head._2
