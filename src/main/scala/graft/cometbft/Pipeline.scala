@@ -34,6 +34,10 @@ object Pipeline {
 
   def run(spark: SparkSession, logDir: String, warehouse: String,
           analytics: Seq[Analytic] = Analytics.all): Map[String, Long] = {
+    // Two copies of one analytic would race two overwrites of its tables.
+    val names = analytics.map(_.name)
+    val repeated = names.diff(names.distinct).distinct
+    require(repeated.isEmpty, s"Pipeline: analytics named more than once: ${repeated.mkString(", ")}")
     val raw    = LogIngest.read(spark, logDir)
     val events = Normalize.normalize(raw)
 
@@ -116,6 +120,8 @@ object Pipeline {
     * — the optional third arg mirrors the reference's YAML plugin list
     * (omitted = all analytics enabled). */
   def main(args: Array[String]): Unit = {
+    require(args.length >= 2,
+      "usage: graft.cometbft.Pipeline <logDir> <warehouseDir> [analytics-csv]")
     val Array(logDir, out) = args.take(2)
     val enabled = Analytics.byNames(
       args.drop(2).headOption.toSeq.flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty))

@@ -292,7 +292,7 @@ object CorpusOps {
     // pipeline (the Dedup sketch-table pattern — persist to reliable
     // storage at cluster scale). Its blocks BACK the returned lazy frame,
     // so they cannot be freed here; long-lived callers drop them after
-    // consuming the result (Bench/ProfCorpus drain via
+    // consuming the result (Bench drains via
     // sparkContext.getPersistentRDDs). Same lifetime note for the
     // importanceWeights feature cache and the sourceOverlap shingle set.
     val spans = Dedup.shingleRows(docs, idCol, textCol, n)
@@ -784,7 +784,7 @@ object CorpusOps {
     * re-scan (each branch pruning its own columns) is cheap, while
     * caching the raw corpus doubles storage — materialize-once is
     * reserved for DERIVED tables (sketches, labels), never the source.
-    * 10x-scaling smoke: 1.1x (ProfScale, PLANS.md). */
+    * 10x-scaling smoke: 1.1x (a past measurement, PLANS.md round 7). */
   def curationDecisions(docs: DataFrame, idCol: String, textCol: String,
                         declaredLang: Column, isBenchmark: Column,
                         n: Int = 3, minFamiliarityPpm: Long = 100000L): DataFrame = {

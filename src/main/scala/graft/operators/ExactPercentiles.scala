@@ -15,14 +15,10 @@ import org.apache.spark.sql.functions._
   * These deliberately differ from textbook percentiles (`percentile()` would
   * interpolate) — the formulas are reproduced exactly for oracle parity.
   *
-  * Implementation: `sort_array(collect_list(x))` + `element_at` + one
-  * higher-order `aggregate` pass for the buckets. collect_list keeps each
-  * group's values in executor memory: right for group cardinalities like
-  * per-(node-pair, msg-type) latency sets (thousands of entries). For
-  * unbounded groups at 100 TB, swap in a sketch (t-digest) for the
-  * percentile fields and keep the exact path for bounded keys — the index
-  * formula itself requires the full multiset, so exactness IS the memory
-  * cost.
+  * The index formula requires the full multiset, so exactness IS the
+  * memory cost: the aggregate buffers each group's distinct values. That
+  * is right for group cardinalities like per-(node-pair, msg-type) latency
+  * sets (thousands of entries).
   *
   * The double-truncated index is computed as `floor(count * 0.95D)`:
   * `0.95` must be an IEEE double in the oracle too (`CAST(0.95 AS DOUBLE)`
@@ -33,47 +29,11 @@ object ExactPercentiles {
 
   /** Single-pass scalable form (default): the custom
     * [[graft.agg.ExactIntHistogramAgg]] aggregate — buffer bounded by
-    * distinct values per group, not rows; identical output to
-    * [[histogramViaCollect]] (property-tested + oracle-checked). */
+    * distinct values per group, not rows; identical output to the
+    * built-ins-only `histogramViaCollect` reference in CatalystNativeSpec
+    * (property-tested + oracle-checked). */
   def histogram(df: DataFrame, groupCols: Seq[String], valueCol: Column): DataFrame =
     df.groupBy(groupCols.map(col): _*)
       .agg(graft.agg.ExactIntHistogramAgg.column(valueCol).as("h"))
       .select((groupCols.map(col) :+ col("h.*")): _*)
-
-  /** Built-ins-only formulation (sort_array + element_at + higher-order
-    * aggregate): exact same results, memory O(rows-per-group) — kept as the
-    * cross-check reference for the custom aggregate. */
-  def histogramViaCollect(df: DataFrame, groupCols: Seq[String], valueCol: Column): DataFrame = {
-    val g = df
-      .groupBy(groupCols.map(col): _*)
-      .agg(sort_array(collect_list(valueCol)).as("vals"))
-      .withColumn("n", size(col("vals")).cast("long"))
-    val n     = col("n")
-    val vals  = col("vals")
-    // element_at is 1-based; the reference indexes 0-based.
-    def at(idx0: Column): Column = element_at(vals, (idx0 + 1).cast("int"))
-    // (a+b)/2 via double is exact (division by a power of two) and the cast
-    // truncates toward zero exactly like Go's integer division on positives.
-    val median = when(n % 2 === 0, ((at(n / 2 - 1) + at(n / 2)) / lit(2L)).cast("long"))
-      .otherwise(at(n / 2))
-    val p95 = at(floor(n.cast("double") * lit(0.95d)).cast("long"))
-    val p99 = at(floor(n.cast("double") * lit(0.99d)).cast("long"))
-    def bucket(pred: Column => Column): Column =
-      aggregate(vals, lit(0L), (acc, x) => acc + when(pred(x), 1L).otherwise(0L))
-    g.withColumn("cnt", n)
-      .withColumn("min_v", element_at(vals, 1))
-      .withColumn("max_v", element_at(vals, -1))
-      .withColumn("sum_v", aggregate(vals, lit(0L), _ + _))
-      // `div` is exact integral division — double division + cast could
-      // diverge from the reference's integer mean at 1-ulp boundaries.
-      .withColumn("mean_v", expr("sum_v div cnt"))
-      .withColumn("median_v", median)
-      .withColumn("p95_v", p95)
-      .withColumn("p99_v", p99)
-      .withColumn("below_p50", bucket(_ < median))
-      .withColumn("p50_to_p95", bucket(x => x >= median && x < p95))
-      .withColumn("p95_to_p99", bucket(x => x >= p95 && x < p99))
-      .withColumn("above_p99", bucket(_ >= p99))
-      .drop("vals", "n", "sum_v")
-  }
 }

@@ -252,7 +252,7 @@ object Similarity {
     * `array_max` variant (k inline dot+struct expressions, engaged by
     * raising `codegenMaxK`) was presumed the codegen fast path but
     * MEASURED SLOWER at every k at sf0.1 — 0.77 vs 0.56 s at k=16, 3.9
-    * vs 0.97 s at k=128 (ProfCorpus; the k-fold generated method grows
+    * vs 0.97 s at k=128 (PLANS.md round 7; the k-fold generated method grows
     * past the whole-stage-codegen method ceiling while the fold keeps
     * one tight DotLongArrays loop) — so the fold is the default and the
     * unrolled path is retained for A/B and the parity spec.

@@ -17,34 +17,28 @@ import graft.cometbft.{Fixtures, Pipeline}
   */
 object CometbftQueries {
 
-  /** One fixture warehouse per JVM, built on first access, shared by all
-    * entries (Verify calls each query once). */
+  /** One fixture warehouse per scenario per JVM, built on first access and
+    * shared by every entry that reads it (Verify calls each query once). */
   private val lock = new Object
-  @volatile private var built: Option[String] = None
+  private val built = scala.collection.mutable.Map.empty[String, String]
 
-  private def builtWarehouse(spark: SparkSession): String = lock.synchronized {
-    built.getOrElse {
-      val logDir = java.nio.file.Files.createTempDirectory("graft-cometbft-logs").toString
-      val wh     = java.nio.file.Files.createTempDirectory("graft-cometbft-wh").toString
-      Fixtures.writeScenario(logDir, heights = 4)
+  private def warehouse(spark: SparkSession, scenario: String)(
+      writeFixture: String => Unit): String = lock.synchronized {
+    built.getOrElseUpdate(scenario, {
+      val logDir = java.nio.file.Files.createTempDirectory(s"graft-cometbft-$scenario-logs").toString
+      val wh     = java.nio.file.Files.createTempDirectory(s"graft-cometbft-$scenario-wh").toString
+      writeFixture(logDir)
       Pipeline.run(spark, logDir, wh)
-      built = Some(wh)
       wh
-    }
+    })
   }
+
+  private def builtWarehouse(spark: SparkSession): String =
+    warehouse(spark, "main")(Fixtures.writeScenario(_, heights = 4))
 
   /** Separate warehouse for the adversarial J1 scenario (q55). */
-  @volatile private var builtAdv: Option[String] = None
-  private def advWarehouse(spark: SparkSession): String = lock.synchronized {
-    builtAdv.getOrElse {
-      val logDir = java.nio.file.Files.createTempDirectory("graft-cometbft-adv-logs").toString
-      val wh     = java.nio.file.Files.createTempDirectory("graft-cometbft-adv-wh").toString
-      Fixtures.writeAdversarialVoteScenario(logDir)
-      Pipeline.run(spark, logDir, wh)
-      builtAdv = Some(wh)
-      wh
-    }
-  }
+  private def advWarehouse(spark: SparkSession): String =
+    warehouse(spark, "adv")(Fixtures.writeAdversarialVoteScenario)
 
   /** INDEPENDENT oracle (unlike the gen_golden pins): the expected rows in
     * [[oracleSql]] were derived BY HAND from the reference machine
@@ -61,17 +55,8 @@ object CometbftQueries {
       .withColumnRenamed("voteType", "vote_type")
 
   /** Separate warehouse for the adversarial J3 scenario (q56). */
-  @volatile private var builtAdvP2p: Option[String] = None
-  private def advP2pWarehouse(spark: SparkSession): String = lock.synchronized {
-    builtAdvP2p.getOrElse {
-      val logDir = java.nio.file.Files.createTempDirectory("graft-cometbft-advp2p-logs").toString
-      val wh     = java.nio.file.Files.createTempDirectory("graft-cometbft-advp2p-wh").toString
-      Fixtures.writeAdversarialP2pScenario(logDir)
-      Pipeline.run(spark, logDir, wh)
-      builtAdvP2p = Some(wh)
-      wh
-    }
-  }
+  private def advP2pWarehouse(spark: SparkSession): String =
+    warehouse(spark, "advp2p")(Fixtures.writeAdversarialP2pScenario)
 
   /** INDEPENDENT hand-derived oracle for the J3 either-order machine
     * (`p2p-messages/processor.go:39-341`) on
@@ -87,17 +72,8 @@ object CometbftQueries {
   }
 
   /** Separate warehouse for the adversarial J2 scenario (q61). */
-  @volatile private var builtAdvBp: Option[String] = None
-  private def advBpWarehouse(spark: SparkSession): String = lock.synchronized {
-    builtAdvBp.getOrElse {
-      val logDir = java.nio.file.Files.createTempDirectory("graft-cometbft-advbp-logs").toString
-      val wh     = java.nio.file.Files.createTempDirectory("graft-cometbft-advbp-wh").toString
-      Fixtures.writeAdversarialBlockPartScenario(logDir)
-      Pipeline.run(spark, logDir, wh)
-      builtAdvBp = Some(wh)
-      wh
-    }
-  }
+  private def advBpWarehouse(spark: SparkSession): String =
+    warehouse(spark, "advbp")(Fixtures.writeAdversarialBlockPartScenario)
 
   /** INDEPENDENT hand-derived oracle for the J2 block-part machine
     * (`block-parts/processor.go:43-90`) on
@@ -111,17 +87,8 @@ object CometbftQueries {
         "sent_ns", "received_ns", "latency_ms")
 
   /** Separate warehouse for the adversarial J4 scenario (q67/q69/q70). */
-  @volatile private var builtAdvNl: Option[String] = None
-  private def advNlWarehouse(spark: SparkSession): String = lock.synchronized {
-    builtAdvNl.getOrElse {
-      val logDir = java.nio.file.Files.createTempDirectory("graft-cometbft-advnl-logs").toString
-      val wh     = java.nio.file.Files.createTempDirectory("graft-cometbft-advnl-wh").toString
-      Fixtures.writeAdversarialNetLatScenario(logDir)
-      Pipeline.run(spark, logDir, wh)
-      builtAdvNl = Some(wh)
-      wh
-    }
-  }
+  private def advNlWarehouse(spark: SparkSession): String =
+    warehouse(spark, "advnl")(Fixtures.writeAdversarialNetLatScenario)
 
   /** INDEPENDENT hand-derived oracle for the J4 two-pass FIFO+fallback
     * matcher (`network-latency/processor.go:122-328`) on
@@ -151,17 +118,8 @@ object CometbftQueries {
     spark.read.parquet(s"${advNlWarehouse(spark)}/network_latency_global_stats")
 
   /** Separate warehouse for the adversarial consensus-timing scenario (q73). */
-  @volatile private var builtAdvCt: Option[String] = None
-  private def advCtWarehouse(spark: SparkSession): String = lock.synchronized {
-    builtAdvCt.getOrElse {
-      val logDir = java.nio.file.Files.createTempDirectory("graft-cometbft-advct-logs").toString
-      val wh     = java.nio.file.Files.createTempDirectory("graft-cometbft-advct-wh").toString
-      Fixtures.writeAdversarialTimingScenario(logDir)
-      Pipeline.run(spark, logDir, wh)
-      builtAdvCt = Some(wh)
-      wh
-    }
-  }
+  private def advCtWarehouse(spark: SparkSession): String =
+    warehouse(spark, "advct")(Fixtures.writeAdversarialTimingScenario)
 
   /** INDEPENDENT hand-derived oracle for the A1/J5 round-timing machine
     * (`consensus-timing/processor.go:33-160`) on
@@ -182,17 +140,8 @@ object CometbftQueries {
   }
 
   /** Separate warehouse for the adversarial timeout scenario (q74-q76). */
-  @volatile private var builtAdvTo: Option[String] = None
-  private def advToWarehouse(spark: SparkSession): String = lock.synchronized {
-    builtAdvTo.getOrElse {
-      val logDir = java.nio.file.Files.createTempDirectory("graft-cometbft-advto-logs").toString
-      val wh     = java.nio.file.Files.createTempDirectory("graft-cometbft-advto-wh").toString
-      Fixtures.writeAdversarialTimeoutScenario(logDir)
-      Pipeline.run(spark, logDir, wh)
-      builtAdvTo = Some(wh)
-      wh
-    }
-  }
+  private def advToWarehouse(spark: SparkSession): String =
+    warehouse(spark, "advto")(Fixtures.writeAdversarialTimeoutScenario)
 
   /** INDEPENDENT hand-derived oracles for the timeout machine on
     * [[Fixtures.writeAdversarialTimeoutScenario]] (J6 join + A9 recovery:
@@ -214,17 +163,8 @@ object CometbftQueries {
     spark.read.parquet(s"${advToWarehouse(spark)}/timeout_analysis")
 
   /** Separate warehouse for the adversarial participation scenario (q77). */
-  @volatile private var builtAdvVp: Option[String] = None
-  private def advVpWarehouse(spark: SparkSession): String = lock.synchronized {
-    builtAdvVp.getOrElse {
-      val logDir = java.nio.file.Files.createTempDirectory("graft-cometbft-advvp-logs").toString
-      val wh     = java.nio.file.Files.createTempDirectory("graft-cometbft-advvp-wh").toString
-      Fixtures.writeAdversarialParticipationScenario(logDir)
-      Pipeline.run(spark, logDir, wh)
-      builtAdvVp = Some(wh)
-      wh
-    }
-  }
+  private def advVpWarehouse(spark: SparkSession): String =
+    warehouse(spark, "advvp")(Fixtures.writeAdversarialParticipationScenario)
 
   /** INDEPENDENT hand-derived oracle for the A2+J7 participation machine
     * (`validator-participation/processor.go:10-180`) on

@@ -11,8 +11,8 @@ import graft.sources.{Layout, Manifest, Tables}
   * never results (the same invariance contract as the interval width
   * statistic). The rewrite itself is cached per source dir and timed
   * separately in Bench (`q137_zorder_build`, the q103_index_build
-  * honesty split); file-skipping evidence lives in LayoutSpec and the
-  * ProfZOrder table in PLANS.md. */
+  * honesty split); file-skipping evidence lives in LayoutSpec and in the
+  * past measurements recorded in PLANS.md rounds 12 and 13. */
 object LayoutQueries {
 
   private def cents(c: org.apache.spark.sql.Column) = round(c * 100).cast("long")

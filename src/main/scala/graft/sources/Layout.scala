@@ -1857,8 +1857,8 @@ object Layout {
 
   /** Candidate (file, key) pairs for STRING point keys against per-file
     * string ranges `iv(file, f_min, f_max[, f_bloom])` — the string-key
-    * classification core shared by [[upsertKeyed]] (and profiled by
-    * ProfMutation):
+    * classification core shared by [[upsertKeyed]] (pinned by
+    * MutationSpec's string-key upsert cases):
     *
     *  1. strip the LONGEST COMMON PREFIX of the global [min(f_min),
     *     max(f_max)] range — shared-prefix id schemes ("doc-000…",
@@ -1907,7 +1907,7 @@ object Layout {
       // re-parsed the ~24 KB serialized sketch for EVERY pair
       // (BloomFilter.readFrom walks the bit array through a
       // DataInputStream — ~60 µs per call; measured 11.5–13.2 s of the
-      // string-upsert's 12–16 s total at sf0.1, ProfBuilds updstr).
+      // string-upsert's 12–16 s total at sf0.1; OPTIMIZATION_r19.md).
       // Grouping the stabbed keys per file and deserializing each file's
       // bloom once per batch is the guide-§4.5 amortization; the pair set
       // emitted is pointwise identical (same membership test per

@@ -10,8 +10,7 @@ import graft.cometbft.{Analytics, LogIngest, Normalize}
   * is the faithful streaming extension: file-source `readStream` over a log
   * directory → the same parse/normalize chain → stateful pairing via
   * `flatMapGroupsWithState` (the keyed-state analog of the vote-latency
-  * map, with processing-time timeout replacing end-of-input flush) and a
-  * watermarked windowed aggregation.
+  * map) and a watermarked windowed aggregation.
   *
   * Per-file metadata attach (P7) is stream-static: node metadata is read
   * once in batch from the same directory (metadata lines lead each file)
@@ -62,13 +61,10 @@ object StreamingPipeline {
     * cross-batch order is arrival order (streaming reality — closed-input
     * single-batch runs match batch exactly).
     *
-    * `stateTimeout` (e.g. "10 minutes") bounds state for unmatched keys in
-    * production (replacing the reference's end-of-input flush). Default is
-    * no timeout: processing-time timeouts make the engine schedule
+    * No state timeout: a processing-time timeout makes the engine schedule
     * timeout-check batches forever, which never drains for closed-input
     * `processAllAvailable` runs. */
-  def voteLatencyStream(spark: SparkSession, ev: DataFrame,
-                        stateTimeout: Option[String] = None): Dataset[ConfirmedVote] = {
+  def voteLatencyStream(spark: SparkSession, ev: DataFrame): Dataset[ConfirmedVote] = {
     import spark.implicits._
     val sides = ev
       .filter(col("event_type").isin("send_vote", "receive_packet_vote"))
@@ -83,48 +79,39 @@ object StreamingPipeline {
         col("ts_ns").as("tsNs"))
       .as[VoteSide]
 
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     sides
       .groupByKey(v => (v.height, v.round, v.valIdx, v.sender, v.receiver))
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         (key: (Long, Long, Long, String, String), rows: Iterator[VoteSide],
          state: GroupState[PairState]) => {
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(PairState(created = false, None))
-            val out = scala.collection.mutable.ArrayBuffer.empty[ConfirmedVote]
-            val ordered = rows.toSeq.sortBy(v => (v.tsNs, if (v.side == "send") 0 else 1))
-            var pending  = 0
-            var lastRecv = 0L
-            def flushEpoch(): Unit = {
-              if (pending > 0) {
-                val cv = ConfirmedVote(key._1, key._2, key._3, key._4, key._5,
-                  st.sentNs, lastRecv, st.sentNs.map(sv => (lastRecv - sv) / 1000000L))
-                var i = 0
-                while (i < pending) { out += cv; i += 1 }
-                pending = 0
-              }
+          var st = state.getOption.getOrElse(PairState(created = false, None))
+          val out = scala.collection.mutable.ArrayBuffer.empty[ConfirmedVote]
+          val ordered = rows.toSeq.sortBy(v => (v.tsNs, if (v.side == "send") 0 else 1))
+          var pending  = 0
+          var lastRecv = 0L
+          def flushEpoch(): Unit = {
+            if (pending > 0) {
+              val cv = ConfirmedVote(key._1, key._2, key._3, key._4, key._5,
+                st.sentNs, lastRecv, st.sentNs.map(sv => (lastRecv - sv) / 1000000L))
+              var i = 0
+              while (i < pending) { out += cv; i += 1 }
+              pending = 0
             }
-            ordered.foreach { v =>
-              if (v.side == "send") {
-                flushEpoch()
-                st = PairState(created = true, Some(v.tsNs))
-              } else if (!st.created) {
-                st = PairState(created = true, None)
-              } else {
-                pending += 1
-                lastRecv = v.tsNs
-              }
-            }
-            flushEpoch()
-            state.update(st)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
           }
+          ordered.foreach { v =>
+            if (v.side == "send") {
+              flushEpoch()
+              st = PairState(created = true, Some(v.tsNs))
+            } else if (!st.created) {
+              st = PairState(created = true, None)
+            } else {
+              pending += 1
+              lastRecv = v.tsNs
+            }
+          }
+          flushEpoch()
+          state.update(st)
+          out.iterator
         })
   }
 
@@ -147,44 +134,36 @@ object StreamingPipeline {
     * NULL sent time (the reference's rationalized nil-assertion panic);
     * the FIRST send confirms a pending first receive (negative latency).
     * Ties at one timestamp process sends first (batch `__side` order). */
-  def p2pConfirmStream(spark: SparkSession, ev: DataFrame,
-                       stateTimeout: Option[String] = None): Dataset[P2pConfirmed] = {
+  def p2pConfirmStream(spark: SparkSession, ev: DataFrame): Dataset[P2pConfirmed] = {
     import spark.implicits._
     val sides = Analytics.P2pMessages.sides(ev)
       .select(col("msg_family").as("family"), col("key"), col("sender"), col("receiver"),
         col("key")(0).cast("long").as("height"), col("side"), col("ts_ns").as("tsNs"))
       .as[P2pSide]
 
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     sides
       .groupByKey(v => (v.family, v.key, v.sender, v.receiver, v.height))
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         (key: (String, Seq[String], String, String, Long), rows: Iterator[P2pSide],
          state: GroupState[P2pState]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(P2pState(0L, None, None, anyRecv = false))
-            val out = scala.collection.mutable.ArrayBuffer.empty[P2pConfirmed]
-            def confirm(sent: Option[Long], recv: Long): Unit =
-              out += P2pConfirmed(key._1, key._3, key._4, key._5, sent, recv,
-                sent.map(s => (recv - s) / 1000000L))
-            rows.toSeq.sortBy(v => (v.tsNs, if (v.side == "send") 0 else 1)).foreach { v =>
-              if (v.side == "send") {
-                if (st.nSends == 0 && st.anyRecv) confirm(Some(v.tsNs), st.firstRecv.get)
-                st = st.copy(nSends = st.nSends + 1, lastSend = Some(v.tsNs))
-              } else {
-                if (st.nSends >= 1) confirm(st.lastSend, v.tsNs)
-                else if (st.anyRecv) confirm(None, v.tsNs)
-                st = st.copy(anyRecv = true,
-                  firstRecv = st.firstRecv.orElse(Some(v.tsNs)))
-              }
+          var st = state.getOption.getOrElse(P2pState(0L, None, None, anyRecv = false))
+          val out = scala.collection.mutable.ArrayBuffer.empty[P2pConfirmed]
+          def confirm(sent: Option[Long], recv: Long): Unit =
+            out += P2pConfirmed(key._1, key._3, key._4, key._5, sent, recv,
+              sent.map(s => (recv - s) / 1000000L))
+          rows.toSeq.sortBy(v => (v.tsNs, if (v.side == "send") 0 else 1)).foreach { v =>
+            if (v.side == "send") {
+              if (st.nSends == 0 && st.anyRecv) confirm(Some(v.tsNs), st.firstRecv.get)
+              st = st.copy(nSends = st.nSends + 1, lastSend = Some(v.tsNs))
+            } else {
+              if (st.nSends >= 1) confirm(st.lastSend, v.tsNs)
+              else if (st.anyRecv) confirm(None, v.tsNs)
+              st = st.copy(anyRecv = true,
+                firstRecv = st.firstRecv.orElse(Some(v.tsNs)))
             }
-            state.update(st)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
           }
+          state.update(st)
+          out.iterator
         })
   }
 
@@ -223,8 +202,7 @@ object StreamingPipeline {
     * hash-shared-between-TrySend-and-direct-send corner (the batch side
     * documents the same corner). Rows are time-ordered within each
     * micro-batch; a closed single-batch run reproduces batch order. */
-  def networkLatencyStream(spark: SparkSession, ev: DataFrame,
-                           stateTimeout: Option[String] = None): Dataset[NlMeasurement] = {
+  def networkLatencyStream(spark: SparkSession, ev: DataFrame): Dataset[NlMeasurement] = {
     import spark.implicits._
     val sides = ev
       .filter(col("event_type").startsWith("send_") ||
@@ -241,49 +219,42 @@ object StreamingPipeline {
         col("ts_ns").as("tsNs"))
       .as[NlSide]
 
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     sides
       .groupByKey(_.rawHash)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         (hash: String, rows: Iterator[NlSide], state: GroupState[NlQueues]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(NlQueues(Nil, Nil, Nil))
-            val out = scala.collection.mutable.ArrayBuffer.empty[NlMeasurement]
-            val ordered = rows.toSeq.sortBy(v => (v.tsNs, if (v.side == "send") 0 else 1))
-            def latencyMs(a: Long, b: Long): Long = math.abs(a - b) / 1000000L
-            ordered.foreach {
-              case NlSide(_, s, r, "send", mt, t) if r.nonEmpty => // composite send
-                val pendingIdx = st.recvs.indexWhere(p => p._1 == s && p._2 == r)
-                if (pendingIdx >= 0) { // out-of-order: send pops the oldest receive
-                  val (_, _, rt) = st.recvs(pendingIdx)
-                  st = st.copy(recvs = st.recvs.patch(pendingIdx, Nil, 1))
-                  out += NlMeasurement(hash, s, r, t, rt, "exact", mt, latencyMs(t, rt))
-                } else st = st.copy(sends = st.sends :+ ((s, r, t, mt)))
-              case NlSide(_, s, _, "send", mt, t) => // TrySend: no peer → raw pool
-                st = st.copy(rawPool = st.rawPool :+ ((s, t, mt)))
-              case NlSide(_, s, r, _, mt, t) => // receive (sender = source peer)
-                val sendIdx = st.sends.indexWhere(p => p._1 == s && p._2 == r)
-                if (sendIdx >= 0) { // in-order: pop the oldest composite send
-                  val (_, _, stime, smt) = st.sends(sendIdx)
-                  st = st.copy(sends = st.sends.patch(sendIdx, Nil, 1))
-                  out += NlMeasurement(hash, s, r, stime, t, "exact", smt, latencyMs(t, stime))
-                } else {
-                  // pending forever (finalizeStats counts it unmatched even
-                  // if the fallback below matches), then the at-arrival pool
-                  st = st.copy(recvs = st.recvs :+ ((s, r, t)))
-                  st.rawPool.headOption.foreach { case (ps, pt, pmt) =>
-                    st = st.copy(rawPool = st.rawPool.tail)
-                    out += NlMeasurement(hash, ps, r, pt, t, "hash_fallback", pmt, latencyMs(t, pt))
-                  }
+          var st = state.getOption.getOrElse(NlQueues(Nil, Nil, Nil))
+          val out = scala.collection.mutable.ArrayBuffer.empty[NlMeasurement]
+          val ordered = rows.toSeq.sortBy(v => (v.tsNs, if (v.side == "send") 0 else 1))
+          def latencyMs(a: Long, b: Long): Long = math.abs(a - b) / 1000000L
+          ordered.foreach {
+            case NlSide(_, s, r, "send", mt, t) if r.nonEmpty => // composite send
+              val pendingIdx = st.recvs.indexWhere(p => p._1 == s && p._2 == r)
+              if (pendingIdx >= 0) { // out-of-order: send pops the oldest receive
+                val (_, _, rt) = st.recvs(pendingIdx)
+                st = st.copy(recvs = st.recvs.patch(pendingIdx, Nil, 1))
+                out += NlMeasurement(hash, s, r, t, rt, "exact", mt, latencyMs(t, rt))
+              } else st = st.copy(sends = st.sends :+ ((s, r, t, mt)))
+            case NlSide(_, s, _, "send", mt, t) => // TrySend: no peer → raw pool
+              st = st.copy(rawPool = st.rawPool :+ ((s, t, mt)))
+            case NlSide(_, s, r, _, mt, t) => // receive (sender = source peer)
+              val sendIdx = st.sends.indexWhere(p => p._1 == s && p._2 == r)
+              if (sendIdx >= 0) { // in-order: pop the oldest composite send
+                val (_, _, stime, smt) = st.sends(sendIdx)
+                st = st.copy(sends = st.sends.patch(sendIdx, Nil, 1))
+                out += NlMeasurement(hash, s, r, stime, t, "exact", smt, latencyMs(t, stime))
+              } else {
+                // pending forever (finalizeStats counts it unmatched even
+                // if the fallback below matches), then the at-arrival pool
+                st = st.copy(recvs = st.recvs :+ ((s, r, t)))
+                st.rawPool.headOption.foreach { case (ps, pt, pmt) =>
+                  st = st.copy(rawPool = st.rawPool.tail)
+                  out += NlMeasurement(hash, ps, r, pt, t, "hash_fallback", pmt, latencyMs(t, pt))
                 }
-            }
-            state.update(st)
-            stateTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
+              }
           }
+          state.update(st)
+          out.iterator
         })
   }
 
@@ -1468,7 +1439,6 @@ object StreamingPipeline {
     *
     * `union` both sides into one [[AsOfSide]] stream ("r" rows = versions,
     * "l" rows = probes); every probe emits exactly one [[AsOfJoined]].
-    * `stateTimeout` bounds state for dead keys in production.
     *
     * Memory bound: the CROSS-batch state is O(historyDepth) per key, but
     * WITHIN a micro-batch one key's rows are buffered and sorted in the
@@ -1478,39 +1448,31 @@ object StreamingPipeline {
     * (`maxFilesPerTrigger` / `maxOffsetsPerTrigger` / rate limits) so one
     * hot key's slice of a batch fits a task comfortably. */
   def temporalAsOfStream(spark: SparkSession, sides: Dataset[AsOfSide],
-                         stateTimeout: Option[String] = None,
                          historyDepth: Int = 1): Dataset[AsOfJoined] = {
     import spark.implicits._
     require(historyDepth > 0, s"historyDepth must be positive, got $historyDepth")
-    val timeoutConf =
-      if (stateTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     sides
       .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         (key: String, rows: Iterator[AsOfSide], state: GroupState[AsOfHistory]) => {
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            // newest-first; insertion keeps order and the D-bound
-            var hist = state.getOption.map(_.versions).getOrElse(Nil)
-            val out  = scala.collection.mutable.ArrayBuffer.empty[AsOfJoined]
-            // Version rows sort before probes at one ts (inclusive as-of);
-            // equal-ts versions resolve last-in-order = max payload, the
-            // batch operator's greatest-tiebreak contract.
-            val ordered = rows.toSeq.sortBy(r => (r.ts, if (r.side == "r") 0 else 1, r.payload))
-            ordered.foreach { r =>
-              if (r.side == "r") {
-                val (newer, older) = hist.span(v => v.rightTs > r.ts)
-                hist = (newer ::: (AsOfState(r.ts, r.payload) :: older)).take(historyDepth)
-              } else {
-                val m = hist.find(_.rightTs <= r.ts)
-                out += AsOfJoined(key, r.ts, r.payload, m.map(_.rightTs), m.map(_.rightPayload))
-              }
+          // newest-first; insertion keeps order and the D-bound
+          var hist = state.getOption.map(_.versions).getOrElse(Nil)
+          val out  = scala.collection.mutable.ArrayBuffer.empty[AsOfJoined]
+          // Version rows sort before probes at one ts (inclusive as-of);
+          // equal-ts versions resolve last-in-order = max payload, the
+          // batch operator's greatest-tiebreak contract.
+          val ordered = rows.toSeq.sortBy(r => (r.ts, if (r.side == "r") 0 else 1, r.payload))
+          ordered.foreach { r =>
+            if (r.side == "r") {
+              val (newer, older) = hist.span(v => v.rightTs > r.ts)
+              hist = (newer ::: (AsOfState(r.ts, r.payload) :: older)).take(historyDepth)
+            } else {
+              val m = hist.find(_.rightTs <= r.ts)
+              out += AsOfJoined(key, r.ts, r.payload, m.map(_.rightTs), m.map(_.rightPayload))
             }
-            if (hist.nonEmpty) state.update(AsOfHistory(hist))
-            stateTimeout.foreach(state.setTimeoutDuration)
-            out.iterator
           }
+          if (hist.nonEmpty) state.update(AsOfHistory(hist))
+          out.iterator
         })
   }
 }

@@ -252,6 +252,19 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("a repeated analytic is rejected before anything is read or written") {
+    val wh = tmp("graft-dup-wh")
+    val ex = intercept[IllegalArgumentException](
+      Pipeline.run(spark, smallLogs, wh, Seq(Analytics.ConsensusSteps, Analytics.ConsensusSteps)))
+    assert(ex.getMessage.contains("consensus_steps"), ex.getMessage)
+    assert(new java.io.File(wh).list().isEmpty)
+  }
+
+  test("Pipeline.main without <logDir> <warehouseDir> fails with its usage") {
+    val ex = intercept[IllegalArgumentException](Pipeline.main(Array("only-logs")))
+    assert(ex.getMessage.contains("usage: graft.cometbft.Pipeline"), ex.getMessage)
+  }
+
   test("P7 fail-fast: a file without metadata lines fails with its name (app.go:97-99)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-nometa").toString
     // valid consensus line, but neither "P2P Node ID" nor validator line

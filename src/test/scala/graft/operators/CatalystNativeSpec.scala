@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorExprs
@@ -72,7 +72,7 @@ class CatalystNativeSpec extends AnyFunSuite {
     } yield (s"g$g", rnd.nextInt(500).toLong)
     val df = rows.toDF("g", "v")
     val fast = ExactPercentiles.histogram(df, Seq("g"), $"v")
-    val ref  = ExactPercentiles.histogramViaCollect(df, Seq("g"), $"v")
+    val ref  = CatalystNativeSpec.histogramViaCollect(df, Seq("g"), $"v")
     val cols = fast.columns.sorted
     assert(ref.columns.sorted.toSeq == cols.toSeq)
     val f = fast.select(cols.map(col): _*).orderBy("g").collect().map(_.toSeq)
@@ -154,31 +154,44 @@ class CatalystNativeSpec extends AnyFunSuite {
       k += 1
     }
   }
+}
 
-  test("log-bucket sketch quantiles bound relative error vs exact") {
-    import spark.implicits._
-    import graft.agg.{ExactIntHistogramAgg, LogBucketHistogramAgg}
-    val rnd = new scala.util.Random(11)
-    // skewed latency-like distribution over 5 groups
-    val rows = (1 to 20000).map { _ =>
-      val g = rnd.nextInt(5)
-      val v = math.max(0L, (math.exp(rnd.nextGaussian() * 1.5 + 4)).toLong)
-      (g, v)
-    }
-    val df = rows.toDF("g", "v")
-    val exact  = df.groupBy($"g").agg(ExactIntHistogramAgg.column($"v").as("h"))
-      .select($"g", $"h.cnt", $"h.mean_v", $"h.median_v", $"h.p95_v").collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    val approx = df.groupBy($"g").agg(LogBucketHistogramAgg.column($"v").as("h"))
-      .select($"g", $"h.cnt", $"h.mean_v", $"h.p50_est", $"h.p95_est").collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-    exact.foreach { case (g, (n, mean, med, p95)) =>
-      val (an, amean, ap50, ap95) = approx(g)
-      assert(an == n && amean == mean, s"group $g count/mean must be exact")
-      // log2 half-octave buckets: estimate within ~50% relative error
-      def close(est: Long, ex: Long) = ex == 0 || (est.toDouble / ex > 0.5 && est.toDouble / ex < 2.0)
-      assert(close(ap50, med), s"g=$g p50 est $ap50 vs exact $med")
-      assert(close(ap95, p95), s"g=$g p95 est $ap95 vs exact $p95")
-    }
+object CatalystNativeSpec {
+
+  /** Built-ins-only formulation (sort_array + element_at + higher-order
+    * aggregate): exact same results, memory O(rows-per-group) — kept as the
+    * cross-check reference for the custom aggregate. */
+  def histogramViaCollect(df: DataFrame, groupCols: Seq[String], valueCol: Column): DataFrame = {
+    val g = df
+      .groupBy(groupCols.map(col): _*)
+      .agg(sort_array(collect_list(valueCol)).as("vals"))
+      .withColumn("n", size(col("vals")).cast("long"))
+    val n     = col("n")
+    val vals  = col("vals")
+    // element_at is 1-based; the reference indexes 0-based.
+    def at(idx0: Column): Column = element_at(vals, (idx0 + 1).cast("int"))
+    // (a+b)/2 via double is exact (division by a power of two) and the cast
+    // truncates toward zero exactly like Go's integer division on positives.
+    val median = when(n % 2 === 0, ((at(n / 2 - 1) + at(n / 2)) / lit(2L)).cast("long"))
+      .otherwise(at(n / 2))
+    val p95 = at(floor(n.cast("double") * lit(0.95d)).cast("long"))
+    val p99 = at(floor(n.cast("double") * lit(0.99d)).cast("long"))
+    def bucket(pred: Column => Column): Column =
+      aggregate(vals, lit(0L), (acc, x) => acc + when(pred(x), 1L).otherwise(0L))
+    g.withColumn("cnt", n)
+      .withColumn("min_v", element_at(vals, 1))
+      .withColumn("max_v", element_at(vals, -1))
+      .withColumn("sum_v", aggregate(vals, lit(0L), _ + _))
+      // `div` is exact integral division — double division + cast could
+      // diverge from the reference's integer mean at 1-ulp boundaries.
+      .withColumn("mean_v", expr("sum_v div cnt"))
+      .withColumn("median_v", median)
+      .withColumn("p95_v", p95)
+      .withColumn("p99_v", p99)
+      .withColumn("below_p50", bucket(_ < median))
+      .withColumn("p50_to_p95", bucket(x => x >= median && x < p95))
+      .withColumn("p95_to_p99", bucket(x => x >= p95 && x < p99))
+      .withColumn("above_p99", bucket(_ >= p99))
+      .drop("vals", "n", "sum_v")
   }
 }
