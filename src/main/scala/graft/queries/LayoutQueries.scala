@@ -45,15 +45,18 @@ object LayoutQueries {
       val again = cache.get(key)
       if (again != null) again
       else {
-        val t0 = System.nanoTime()
         val out = build
-        if (sys.env.contains("SPARK_GRAFT_PROF_BUILDS"))
-          System.err.println(
-            f"[graft-prof] fixture $key%-60s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
         cache.put(key, out)
         out
       }
     }
+  }
+
+  /** Forget the cached copies under `dir` whose table name `drops`, so
+    * their next use rebuilds them (the `invalidateZorderNN` verbs). */
+  private def invalidate(dir: String)(drops: String => Boolean): Unit = {
+    cache.keySet.removeIf(k => k.startsWith(s"$dir|") && drops(k.stripPrefix(s"$dir|")))
+    ()
   }
 
   /** Run independent fixture builds on a small driver-side pool (the
@@ -505,12 +508,7 @@ object LayoutQueries {
   }
   private val R15Tables = Set("events_part_nowk", "events_del_sql",
     "events_upd_sql", "events_upd_where", "events_append", "events_bloom")
-  def invalidateZorder15(dir: String): Unit = {
-    cache.keySet.removeIf { k =>
-      R15Tables.contains(k.stripPrefix(s"$dir|"))
-    }
-    ()
-  }
+  def invalidateZorder15(dir: String): Unit = invalidate(dir)(R15Tables)
 
   /** Events table WIDENED mid-life by [[Layout.addColumns]]: even
     * event_ids committed with the original schema, then `bonus DOUBLE`
@@ -598,12 +596,7 @@ object LayoutQueries {
   private val R16Tables = Set("events_upd_str", "events_widened",
     "events_merge_del", "events_merge_multikey", "events_merge_cond_upd",
     "events_merge_set", "events_merge_sync")
-  def invalidateZorder16(dir: String): Unit = {
-    cache.keySet.removeIf { k =>
-      R16Tables.contains(k.stripPrefix(s"$dir|"))
-    }
-    ()
-  }
+  def invalidateZorder16(dir: String): Unit = invalidate(dir)(R16Tables)
 
   /** Clustered events copy SYNCED with a CONDITIONED by-source arm —
     * the retention-sync shape: matched rows take the source (even
@@ -852,12 +845,7 @@ object LayoutQueries {
   private val R17Tables = Set("events_del_dv", "events_del_dv_reified",
     "events_merge_lowcard", "events_merge_sync_cond", "events_merge_evolve",
     "events_compact_sql", "events_upd_dv", "events_restored", "docs_del_dv")
-  def invalidateZorder17(dir: String): Unit = {
-    cache.keySet.removeIf { k =>
-      R17Tables.contains(k.stripPrefix(s"$dir|"))
-    }
-    ()
-  }
+  def invalidateZorder17(dir: String): Unit = invalidate(dir)(R17Tables)
 
   /** [[zEventsDelDv]] with the `.envelopes` index present and the
     * deletion vector GUARANTEED live (round 19): the box delete
@@ -887,12 +875,7 @@ object LayoutQueries {
   }
   private val R18Tables = Set("events_merge_dv_arms", "events_del_dv_thresh",
     "events_named", "events_inserted")
-  def invalidateZorder18(dir: String): Unit = {
-    cache.keySet.removeIf { k =>
-      R18Tables.contains(k.stripPrefix(s"$dir|"))
-    }
-    ()
-  }
+  def invalidateZorder18(dir: String): Unit = invalidate(dir)(R18Tables)
 
   /** Round-19 build (the indexed live-DV fixture), its own bench entry
     * so q200+ time serving only. */
@@ -903,12 +886,7 @@ object LayoutQueries {
       () => zTablesReg(spark, dir)))
   }
   private val R19Tables = Set("events_del_dv_idx", "events_altered", "tables_reg")
-  def invalidateZorder19(dir: String): Unit = {
-    cache.keySet.removeIf { k =>
-      R19Tables.contains(k.stripPrefix(s"$dir|"))
-    }
-    ()
-  }
+  def invalidateZorder19(dir: String): Unit = invalidate(dir)(R19Tables)
 
   /** Round-14 build (two-commit incremental events table + the
     * small-file compaction fixture + the delete/upsert mutation
@@ -923,32 +901,15 @@ object LayoutQueries {
   }
   private val R14Tables = Set("events_incr", "events_compact", "events_del",
     "events_upd", "events_del_part")
-  def invalidateZorder14(dir: String): Unit = {
-    cache.keySet.removeIf { k =>
-      R14Tables.contains(k.stripPrefix(s"$dir|"))
-    }
-    ()
-  }
+  def invalidateZorder14(dir: String): Unit = invalidate(dir)(R14Tables)
 
   /** Invalidate the copies [[buildZorder]] builds — and ONLY those, so
     * timing that build twice never forces a rebuild of the round-13
     * copies mid-bench (and vice versa for [[invalidateZorder13]]). */
-  def invalidateZorder(dir: String): Unit = {
-    cache.keySet.removeIf { k =>
-      val suffix = k.stripPrefix(s"$dir|")
-      k.startsWith(s"$dir|") && !R13Tables.contains(suffix) &&
-        !R14Tables.contains(suffix) && !R15Tables.contains(suffix) &&
-        !R16Tables.contains(suffix) && !R17Tables.contains(suffix) &&
-        !R18Tables.contains(suffix) && !R19Tables.contains(suffix)
-    }
-    ()
-  }
-  def invalidateZorder13(dir: String): Unit = {
-    cache.keySet.removeIf { k =>
-      R13Tables.contains(k.stripPrefix(s"$dir|"))
-    }
-    ()
-  }
+  def invalidateZorder(dir: String): Unit =
+    invalidate(dir)(t => !Seq(R13Tables, R14Tables, R15Tables, R16Tables,
+      R17Tables, R18Tables, R19Tables).exists(_.contains(t)))
+  def invalidateZorder13(dir: String): Unit = invalidate(dir)(R13Tables)
 
   // ---------------------------------------------------------------- q137
   /** Two-dimensional box over the Z-ORDERED events copy: (user_id band) ×

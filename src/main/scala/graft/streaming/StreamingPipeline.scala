@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.cometbft.{Analytics, LogIngest, Normalize}
@@ -571,9 +572,9 @@ object StreamingPipeline {
     * `too_short`), never indexed.
     *
     * Fault tolerance: decisions write with dynamic partition-overwrite
-    * on `batch_id` (replay-idempotent), the sketch append is guarded by
-    * a batch-id probe, and matching always filters the sketch to
-    * STRICTLY EARLIER batches — a replayed batch recomputes identical
+    * on `batch_id` (replay-idempotent), the sketch append commits
+    * exactly once through [[appendOnce]]'s log, and matching always
+    * filters the sketch to STRICTLY EARLIER batches — a replayed batch recomputes identical
     * decisions even if it crashed mid-write (checkpoint-restart
     * spec-pinned).
     *
@@ -610,11 +611,11 @@ object StreamingPipeline {
     import graft.operators.{Checkpoints, Dedup}
     val spark = batch.sparkSession
     recoverSketch(spark, sketchPath)
-    val sketchHadoopPath = new org.apache.hadoop.fs.Path(sketchPath)
-    val fs = sketchHadoopPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val sketch = new Path(sketchPath)
     val stored: Option[DataFrame] =
-      if (fs.exists(sketchHadoopPath)) Some(spark.read.parquet(sketchPath)) else None
-    val replayed = stored.exists(df => !df.filter(col("batch_id") === batchId).isEmpty)
+      if (sketch.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(sketch))
+        Some(spark.read.parquet(sketchPath))
+      else None
     val prior = stored.map(_.filter(col("batch_id") < batchId))
     val sig = Checkpoints.stage(
       Dedup.minhashSigTable(batch, idCol, textCol, n, k))
@@ -647,9 +648,7 @@ object StreamingPipeline {
         (col("reason") === "kept" || col("reason") === "too_short").as("kept"),
         col("reason"))
     overwriteByBatchId(decisions, decisionsPath)
-    if (!replayed)
-      sig.withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(sketchPath)
+    appendOnce(sig.withColumn("batch_id", lit(batchId)), batchId, sketchPath)
     Checkpoints.free(sig)
     // Online compaction: between the append above and the next batch's
     // read there is NO other reader of the sketch dir (this loop is its
@@ -666,19 +665,13 @@ object StreamingPipeline {
   }
 
   /** Replay-idempotent per-batch write: dynamic partition-overwrite on
-    * `batch_id`, so a replayed micro-batch rewrites exactly its own
+    * `batch_id` (a per-write option, so the session's conf is never
+    * touched), so a replayed micro-batch rewrites exactly its own
     * partition and a crash mid-write leaves no partial batch visible to
     * a re-run. */
-  private def overwriteByBatchId(df: DataFrame, path: String): Unit = {
-    val spark = df.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try df.write.mode("overwrite").partitionBy("batch_id").parquet(path)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
-  }
+  private def overwriteByBatchId(df: DataFrame, path: String): Unit =
+    df.write.partitionBy("batch_id").option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite").parquet(path)
 
   /** The full production ingestion topology: the self-maintaining
     * NEAR-dup index's survivor stream feeding the curation gates —
@@ -777,21 +770,6 @@ object StreamingPipeline {
       }
       .start()
 
-  /** Maintenance for [[selfMaintainingDedupSink]]'s sketch table: per-batch
-    * appends accumulate one small file set per micro-batch — the classic
-    * small-files problem; at production batch rates the sketch dir
-    * degrades every later batch's scan. Rewrites the table into
-    * `targetFiles` right-sized files, preserving every row and the
-    * `batch_id` stamps (replay idempotency keeps working).
-    *
-    * Safe to run between streaming restarts AND online between batches
-    * (the foreachBatch loop is the sketch's only reader, and it reads at
-    * batch start — `compactEveryBatches` wires the cadence). Crash-safe
-    * swap order: write tmp → rename live to backup → rename tmp to live
-    * → delete backup; a crash at any point leaves a complete copy under
-    * either the live or the backup name (never delete-before-rename),
-    * and [[recoverSketch]] — run here and at every batch start — heals
-    * each intermediate state deterministically. */
   /** Self-maintaining Z-ORDERED table sink — the [[compactSketch]]
     * operational pattern applied to LAYOUT: each micro-batch appends to
     * `tablePath` in arrival order (cheap), and every
@@ -806,29 +784,20 @@ object StreamingPipeline {
     * crash at any point leaves a complete copy ([[DirSwap]]'s state
     * machine, healed before every batch).
     *
-    * EXACTLY-ONCE appends via a marker-file commit log
-    * (`<table>.batches/b<id>`, one empty file per committed batch): each
-    * batch stages its files, renames them into the table under
-    * DETERMINISTIC names (`b<id>-<i>.parquet`), then writes the marker —
-    * so the replay probe is one O(1) existence check (never a table
-    * scan), a crash mid-commit is healed by the redo deleting exactly
-    * its own partial `b<id>-*` files, and an empty or half-written table
-    * directory is never read on the append path at all (no
-    * schema-inference crash loops). The log COMPACTS itself: every
-    * [[MarkerKeep]] batches a `wm-<id>` watermark file supersedes all
-    * markers ≤ id and they are deleted — sound because foreachBatch
-    * serializes batches (batch N only runs after N-1's marker landed,
-    * so a watermark at N-[[MarkerKeep]] asserts only what the log
-    * already proved), so the log never holds more than ~2×
-    * [[MarkerKeep]] + 2 files however long the stream runs.
-    * Envelope-index rows for a batch are
-    * appended only AFTER its marker, so the index never describes files
-    * a redo will rewrite. Rows still carry `batch_id` (it survives the
-    * clustering rewrite, and downstream consumers use it); the marker
-    * log, not the column, is the source of commit truth. Single-writer
-    * contract: this sink is the table's only writer; same-process
-    * readers should go through [[graft.sources.Layout.readHealed]]
-    * (heals an interrupted swap first). */
+    * EXACTLY-ONCE appends through [[appendOnce]]'s marker commit log
+    * (`<table>.batches`): the replay probe is one bounded log listing
+    * (never a table scan), a crash mid-commit is healed by the redo
+    * deleting exactly its own partial `b<id>-*` files, and an empty or
+    * half-written table directory is never read on the append path at
+    * all (no schema-inference crash loops). Envelope-index rows for a
+    * batch are appended only AFTER its marker, so the index never
+    * describes files a redo will rewrite. Rows still carry `batch_id`
+    * (it survives the clustering rewrite, and downstream consumers use
+    * it); the marker log, not the column, is the source of commit truth.
+    * Single-writer contract: this sink is the table's only writer;
+    * same-process readers should go through
+    * [[graft.sources.Layout.readHealed]] (heals an interrupted swap
+    * first). */
   def selfClusteringSink(df: DataFrame, cols: Seq[String], tablePath: String,
                          checkpointLocation: String,
                          clusterEveryBatches: Int = 8,
@@ -858,16 +827,91 @@ object StreamingPipeline {
     * (never the recent ones a restart could still probe). */
   private val MarkerKeep = 64
 
-  /** Largest watermark in the marker log, or -1 (crash mid-compaction
-    * can leave two `wm-*` files; the max is always the truth — each one
-    * was sound when written). Bounded listing: the log holds at most
-    * ~2×[[MarkerKeep]]+2 files by construction. */
-  private def markerWatermark(fs: org.apache.hadoop.fs.FileSystem,
-                              logDir: org.apache.hadoop.fs.Path): Long =
-    if (!fs.exists(logDir)) -1L
-    else fs.listStatus(logDir).map(_.getPath.getName)
-      .filter(_.startsWith("wm-")).map(_.drop(3).toLong)
-      .foldLeft(-1L)(math.max)
+  /** One record of an append-once table's commit log: the marker
+    * `b<id>` of a committed batch, or a compaction watermark `wm-<id>`
+    * standing for every id at or below it. The name may carry one Long
+    * after `@`: the exact-HH spill records its batch's max event time
+    * there, and a watermark carries the max over the records it
+    * replaced — so reading the log is a listing, never a file read. */
+  private final case class LogRecord(watermark: Boolean, id: Long, value: Option[Long]) {
+    def name: String = (if (watermark) "wm-" else "b") + id + value.fold("")("@" + _)
+    def commits(batchId: Long): Boolean = if (watermark) batchId <= id else batchId == id
+  }
+  private val LogName = """(b|wm-)(\d+)(?:@(-?\d+))?""".r
+
+  /** The records of the commit log at `<table>.batches` — one listing,
+    * at most ~2×[[MarkerKeep]]+2 names by construction. A crash
+    * mid-compaction can leave two watermarks; each was sound when
+    * written, so the larger one wins. */
+  private def commitLog(fs: FileSystem, tablePath: String): Seq[LogRecord] = {
+    val logDir = new Path(s"$tablePath.batches")
+    if (!fs.exists(logDir)) Nil
+    else fs.listStatus(logDir).toSeq.map(_.getPath.getName).collect {
+      case LogName(kind, id, v) => LogRecord(kind == "wm-", id.toLong, Option(v).map(_.toLong))
+    }
+  }
+
+  /** Append `df` to `tablePath` EXACTLY ONCE for `batchId`: the commit
+    * protocol shared by every append-once foreachBatch sink (the
+    * self-clustering table, the dedup sketch, the exact-HH spill). Replay
+    * is decided here, from the log, never by scanning the table.
+    *   1. The log `<table>.batches` already records the batch (its
+    *      marker, or an id at or below the compaction watermark): skip,
+    *      return None.
+    *   2. Delete the partial `b<id>-*` files a crashed attempt of THIS
+    *      batch left (deterministic names; partition subdirectories
+    *      included).
+    *   3. Stage the write, then rename each file into the table as
+    *      `b<id>-<i>.parquet` under its partition subdirectory.
+    *   4. Write the marker, carrying `record()` (evaluated after the
+    *      write, so an Observation on `df` has arrived).
+    *   5. Every [[MarkerKeep]] batches a `wm-<id>` watermark supersedes
+    *      the markers at or below id, which are deleted. Sound because
+    *      foreachBatch serializes batches (batch N only runs after N-1's
+    *      marker landed, so a watermark at N-[[MarkerKeep]] asserts only
+    *      what the log already proved); the log never holds more than
+    *      ~2×[[MarkerKeep]] + 2 files. A crash anywhere here is safe: the
+    *      watermark is written before the deletions.
+    * Returns the committed files. Single-writer contract: the sink is
+    * the table's only writer. */
+  private def appendOnce(df: DataFrame, batchId: Long, tablePath: String,
+                         partitionBy: Seq[String] = Nil,
+                         record: () => Option[Long] = () => None): Option[Seq[String]] = {
+    val table = new Path(tablePath)
+    val fs = table.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val log = commitLog(fs, tablePath)
+    if (log.exists(_.commits(batchId))) None
+    else {
+      // listStatus, not listFiles: a located status reads each file's
+      // permissions, which the local filesystem forks a process for
+      def files(dir: Path): Seq[Path] = fs.listStatus(dir).toSeq.flatMap(s =>
+        if (s.isDirectory) files(s.getPath) else Seq(s.getPath))
+      if (fs.exists(table))
+        files(table).filter(_.getName.startsWith(s"b$batchId-")).foreach(fs.delete(_, false))
+      val stagingRoot = new Path(s"$tablePath.batch-tmp")
+      val staging = fs.makeQualified(new Path(stagingRoot, batchId.toString))
+      df.write.mode("overwrite").partitionBy(partitionBy: _*).parquet(staging.toString)
+      val moved = files(staging).filter(_.getName.endsWith(".parquet")).sortBy(_.toString)
+        .zipWithIndex.map { case (src, i) =>
+          val partDir = src.getParent.toString.stripPrefix(staging.toString)
+          val dst = new Path(tablePath + partDir, s"b$batchId-$i.parquet")
+          fs.mkdirs(dst.getParent)
+          require(fs.rename(src, dst), s"appendOnce: could not commit $src to $dst")
+          dst.toString
+        }
+      fs.delete(stagingRoot, true)
+      val logDir = new Path(s"$tablePath.batches")
+      fs.create(new Path(logDir, LogRecord(false, batchId, record()).name), true).close()
+      if (batchId >= MarkerKeep && batchId % MarkerKeep == 0) {
+        val wm = batchId - MarkerKeep
+        val superseded = log.filter(r => r.id < wm || r.id == wm && !r.watermark)
+        val mark = LogRecord(true, wm, superseded.flatMap(_.value).maxOption)
+        fs.create(new Path(logDir, mark.name), true).close()
+        superseded.foreach(r => fs.delete(new Path(logDir, r.name), false))
+      }
+      Some(moved)
+    }
+  }
 
   private[streaming] def processClusterBatch(batch: DataFrame, batchId: Long,
       cols: Seq[String], tablePath: String,
@@ -881,76 +925,32 @@ object StreamingPipeline {
         Some(graft.sources.Manifest.retiredPath(tablePath))
       else None
     graft.operators.DirSwap.recover(spark, tablePath, retireTo)
-    // heal the INDEX dir too: step 5 below DirSwap-compacts .envelopes,
-    // and a crash mid-compaction would otherwise leave the index as
-    // .compact-backup — the next appendEnvelopes would then recreate a
-    // fresh live dir holding ONE batch's rows and a later recover would
-    // drop the backup, silently losing every prior envelope row
-    // (I/O-only degradation, but pruning would be gone for old files
+    // heal the INDEX dir too: the append path below DirSwap-compacts
+    // .envelopes, and a crash mid-compaction would otherwise leave the
+    // index as .compact-backup — the next appendEnvelopes would then
+    // recreate a fresh live dir holding ONE batch's rows and a later
+    // recover would drop the backup, silently losing every prior envelope
+    // row (I/O-only degradation, but pruning would be gone for old files
     // until the next full rewrite)
     graft.operators.DirSwap.recover(spark,
       graft.sources.Layout.envelopesPath(tablePath))
-    val table = new org.apache.hadoop.fs.Path(tablePath)
+    val table = new Path(tablePath)
     val fs = table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val logDir = new org.apache.hadoop.fs.Path(s"$tablePath.batches")
-    val marker = new org.apache.hadoop.fs.Path(logDir, s"b$batchId")
-    // replay probe: the marker IS the commit record; ids at or below the
-    // compaction watermark are committed by construction (their markers
-    // were deleted as superseded). O(1) + one bounded log listing.
-    val replayed = fs.exists(marker) || batchId <= markerWatermark(fs, logDir)
-    if (!replayed) {
-      // 1. a crashed attempt of THIS batch left at most files named
-      //    b<id>-* (deterministic names) — delete exactly that partial set
-      if (fs.exists(table))
-        fs.listStatus(table).map(_.getPath)
-          .filter(_.getName.startsWith(s"b$batchId-"))
-          .foreach(p => fs.delete(p, false))
-      // 2. stage, then commit file-by-file via atomic rename
-      val staging = new org.apache.hadoop.fs.Path(s"$tablePath.batch-tmp/$batchId")
-      batch.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").parquet(staging.toString)
-      if (!fs.exists(table)) fs.mkdirs(table)
-      val moved = fs.listStatus(staging).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName).zipWithIndex
-        .map { case (src, i) =>
-          val dst = new org.apache.hadoop.fs.Path(table, s"b$batchId-$i.parquet")
-          require(fs.rename(src, dst), s"selfClusteringSink: could not commit $src to $dst")
-          dst.toString
-        }.toSeq
-      // 3. commit marker — written only after every file landed
-      fs.create(marker, true).close()
-      // 3b. compact the log: foreachBatch serializes batches, so every
-      //     id < batchId is committed — a watermark at batchId-MarkerKeep
-      //     supersedes the markers at or below it (kept window covers any
-      //     id a restart could still probe). Crash anywhere here is safe:
-      //     wm written before deletions, and an old+new wm pair resolves
-      //     to the max.
-      if (batchId >= MarkerKeep && batchId % MarkerKeep == 0) {
-        val wm = batchId - MarkerKeep
-        fs.create(new org.apache.hadoop.fs.Path(logDir, s"wm-$wm"), true).close()
-        fs.listStatus(logDir).map(_.getPath).foreach { p =>
-          val n = p.getName
-          val superseded =
-            (n.startsWith("b") && n.drop(1).forall(_.isDigit) && n.drop(1).toLong <= wm) ||
-              (n.startsWith("wm-") && n.drop(3).toLong < wm)
-          if (superseded) fs.delete(p, false)
-        }
-      }
-      // 4. index the fresh files AFTER the marker: a crash before it
-      //    leaves no envelope rows for files the redo will re-write
-      //    (stale stats on a reused path would break skipping
-      //    exactness); a crash after it leaves the batch merely
-      //    unindexed — prunedRead reads unindexed files unconditionally
-      // bloom columns the table's index already carries ride along, so a
-      // bloom-indexed table keeps point-lookup pruning on FRESH batches
-      // too (a NULL-bloom row would only ever read more, but why degrade)
+    val committed = appendOnce(batch.withColumn("batch_id", lit(batchId)), batchId, tablePath)
+    committed.foreach { moved =>
+      // index the fresh files AFTER the marker: a crash before it leaves
+      // no envelope rows for files the redo will re-write (stale stats on
+      // a reused path would break skipping exactness); a crash after it
+      // leaves the batch merely unindexed — prunedRead reads unindexed
+      // files unconditionally. Bloom columns the table's index already
+      // carries ride along, so a bloom-indexed table keeps point-lookup
+      // pruning on FRESH batches too (a NULL-bloom row would only ever
+      // read more, but why degrade)
       graft.sources.Layout.appendEnvelopes(spark, tablePath, moved, cols,
         bloomCols = graft.sources.Layout.bloomColumns(spark, tablePath)
           .filter(cols.contains))
-      fs.delete(new org.apache.hadoop.fs.Path(s"$tablePath.batch-tmp"), true)
-      // 5. bound the index's own file count (one append per batch)
-      val envDir = new org.apache.hadoop.fs.Path(
-        graft.sources.Layout.envelopesPath(tablePath))
+      // bound the index's own file count (one append per batch)
+      val envDir = new Path(graft.sources.Layout.envelopesPath(tablePath))
       if (fs.exists(envDir) && fs.listStatus(envDir)
             .count(s => s.isFile && s.getPath.getName.endsWith(".parquet")) > IndexCompactFiles)
         graft.operators.DirSwap.swapRewrite(spark, envDir.toString)(_.coalesce(1))(
@@ -984,7 +984,7 @@ object StreamingPipeline {
     // and the NEXT batch's manifest includes these files. The schemas
     // are known here (the batch's plus batch_id, flat table), so the
     // commit skips the footer-inference read — one less job per batch.
-    if ((!replayed || rewrote) && fs.exists(table)) {
+    if ((committed.nonEmpty || rewrote) && fs.exists(table)) {
       val dataSchema = org.apache.spark.sql.types.StructType(
         batch.withColumn("batch_id", lit(batchId)).schema.fields.map(_.copy(nullable = true)))
       graft.sources.Manifest.write(spark, tablePath,
@@ -993,6 +993,22 @@ object StreamingPipeline {
     ()
   }
 
+  /** Maintenance for [[selfMaintainingDedupSink]]'s sketch table: per-batch
+    * appends accumulate one small file set per micro-batch — the classic
+    * small-files problem; at production batch rates the sketch dir
+    * degrades every later batch's scan. Rewrites the table into
+    * `targetFiles` right-sized files, preserving every row and the
+    * `batch_id` stamps (the sketch's commit log lives beside the table,
+    * so replay idempotency keeps working).
+    *
+    * Safe to run between streaming restarts AND online between batches
+    * (the foreachBatch loop is the sketch's only reader, and it reads at
+    * batch start — `compactEveryBatches` wires the cadence). Crash-safe
+    * swap order: write tmp → rename live to backup → rename tmp to live
+    * → delete backup; a crash at any point leaves a complete copy under
+    * either the live or the backup name (never delete-before-rename),
+    * and [[recoverSketch]] — run here and at every batch start — heals
+    * each intermediate state deterministically. */
   def compactSketch(spark: SparkSession, sketchPath: String, targetFiles: Int): Unit =
     graft.operators.DirSwap.swapRewrite(spark, sketchPath)(_.repartition(targetFiles))(
       (df, out) => df.write.mode("overwrite").parquet(out))
@@ -1073,19 +1089,20 @@ object StreamingPipeline {
     * only from arrival to closure. State per open window is the spill
     * partition itself — nothing driver-side.
     *
-    * Fault tolerance (all replay-idempotent, no journal): the spill
-    * append is guarded by a `batch_id` probe on the spill table, the
-    * progress append by one on the progress table, the results write
-    * uses dynamic partition overwrite, and partition deletion is the
-    * final step — a crash anywhere replays to the identical state (the
-    * verify recomputes byte-identical results from the same closed
-    * spill). The replay contract is the engine's own: only the most
-    * recent, not-yet-committed batch ever replays — batches behind the
-    * checkpoint never re-run (their windows' spill may already be
-    * reclaimed). Spec-pinned: closed-input parity vs the batch operator
-    * per window under 1/4/8-batch slicings, last-batch replay idempotency
-    * (incl. the crash-after-results-before-reclaim state), late-row
-    * drop. */
+    * Fault tolerance (all replay-idempotent): the spill append commits
+    * exactly once through [[appendOnce]]'s log (`<spill>.batches`), and
+    * each batch's log record also carries its max event time — the
+    * watermark is read from that one log, with no table of its own. The
+    * results write uses dynamic partition overwrite, and partition
+    * deletion is the final step — a crash anywhere replays to the
+    * identical state (the verify recomputes byte-identical results from
+    * the same closed spill). The replay contract is the engine's own:
+    * only the most recent, not-yet-committed batch ever replays —
+    * batches behind the checkpoint never re-run (their windows' spill
+    * may already be reclaimed). Spec-pinned: closed-input parity vs the
+    * batch operator per window under 1/4/8-batch slicings, last-batch
+    * replay idempotency (incl. the crash-after-results-before-reclaim
+    * state), the redo of a torn spill append, late-row drop. */
   def exactHeavyHitterSink(df: DataFrame, tsCol: String, itemCol: String,
                            windowDur: String, watermark: String,
                            phiPpm: Long, k: Int,
@@ -1119,19 +1136,8 @@ object StreamingPipeline {
       s"groupCols collide with the sink's working columns: ${groupCols.mkString(",")}")
     import graft.operators.HeavyHitters
     val spark = batch.sparkSession
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // "table present" = directory exists AND has visible content (a caller
-    // may hand us pre-created empty dirs; parquet can't infer from those)
-    def exists(p: String) = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      val fs = hp.getFileSystem(hconf)
-      fs.exists(hp) && fs.listStatus(hp).exists { s =>
-        val n = s.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".")
-      }
-    }
-    val progressPath = spillPath + ".progress"
-    graft.operators.DirSwap.recover(spark, progressPath) // heal a crashed compaction
+    val spill = new Path(spillPath)
+    val fs = spill.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     val w = window(col(tsCol), windowDur)
     val rows = batch.select(
@@ -1142,82 +1148,47 @@ object StreamingPipeline {
       .filter(col("item").isNotNull && col("ts_us").isNotNull)
 
     // watermark as of the PREVIOUS trigger: max event time over strictly
-    // earlier batches (replay-deterministic — a replayed batch drops the
-    // same late rows it dropped the first time)
-    val priorProgress =
-      if (exists(progressPath))
-        Some(spark.read.parquet(progressPath).filter(col("batch_id") < batchId))
-      else None
-    val wmBefore = priorProgress
-      .map(_.agg(max(col("max_ts_us"))).head())
-      .filter(!_.isNullAt(0)).map(_.getLong(0) - delayUs)
-      .getOrElse(Long.MinValue)
+    // earlier batches, read from the spill's commit log (replay-
+    // deterministic — a replayed batch drops the same late rows it
+    // dropped the first time)
+    val log = commitLog(fs, spillPath)
+    def watermarkThrough(id: Long, own: Option[Long]): Long =
+      (log.filter(_.id <= id).flatMap(_.value) ++ own).maxOption
+        .fold(Long.MinValue)(_ - delayUs)
+    val wmBefore = watermarkThrough(batchId - 1, None)
 
-    // 1. spill the batch's live rows, guarded against replay by its own
-    //    batch_id probe (the append and the checkpoint commit are not
-    //    atomic together; the probe makes the append idempotent)
-    val spillReplayed = exists(spillPath) &&
-      !spark.read.parquet(spillPath).filter(col("batch_id") === batchId).isEmpty
-    if (!spillReplayed)
-      rows.filter(col("win_end_us") > wmBefore)
-        .withColumn("batch_id", lit(batchId))
-        .write.partitionBy("win_us").mode("append").parquet(spillPath)
+    // 1. spill the batch's live rows exactly once; its max event time is
+    //    observed on the same write (before the late-row filter) and
+    //    stored in the batch's log record
+    val obs = Observation()
+    lazy val batchMax = Some(scala.concurrent.Await.result(obs.future,
+        scala.concurrent.duration.Duration(30, "s")))
+      .filterNot(_.isNullAt(0)).map(_.getLong(0))
+    val appended = appendOnce(
+      rows.observe(obs, max(col("ts_us"))).filter(col("win_end_us") > wmBefore)
+        .withColumn("batch_id", lit(batchId)),
+      batchId, spillPath, Seq("win_us"), () => batchMax)
 
-    // 2. advance the watermark: record this batch's max event time (its
-    //    own probe — a crash between the two appends replays cleanly)
-    val batchMax = rows.agg(max(col("ts_us"))).head()
-    if (!batchMax.isNullAt(0)) {
-      val progReplayed = exists(progressPath) &&
-        !spark.read.parquet(progressPath).filter(col("batch_id") === batchId).isEmpty
-      if (!progReplayed) {
-        import spark.implicits._
-        Seq((batchId, batchMax.getLong(0))).toDF("batch_id", "max_ts_us")
-          .coalesce(1).write.mode("append").parquet(progressPath)
-      }
-    }
-    // bound the progress table: it otherwise accumulates one small file
-    // per batch forever (the sketch-table disease). Everything strictly
-    // older than the previous batch collapses into ONE running-max row —
-    // observation-equivalent, because the watermark only ever reads MAX
-    // over a batch-id prefix, and the engine never replays batches that
-    // far back (their probes can't miss). Crash-safe via [[DirSwap]],
-    // healed at the top of every batch.
-    if (exists(progressPath) && spark.read.parquet(progressPath).count() > 64)
-      graft.operators.DirSwap.swapRewrite(spark, progressPath)(df =>
-        df.filter(col("batch_id") >= batchId - 1)
-          .unionByName(df.filter(col("batch_id") < batchId - 1)
-            .groupBy().agg(max(col("batch_id")).as("batch_id"), max(col("max_ts_us")).as("max_ts_us"))
-            .filter(col("batch_id").isNotNull))
-          .coalesce(1))(
-        (df, out) => df.write.mode("overwrite").parquet(out))
+    // 2. advance the watermark: a replayed batch's own max is in the log
+    val wmNow = watermarkThrough(batchId, appended.flatMap(_ => batchMax))
 
-    val wmNow =
-      if (exists(progressPath)) {
-        val r = spark.read.parquet(progressPath)
-          .filter(col("batch_id") <= batchId).agg(max(col("max_ts_us"))).head()
-        if (r.isNullAt(0)) Long.MinValue else r.getLong(0) - delayUs
-      } else Long.MinValue
-
-    // 3. exact verify per closed window; the closed list is bounded by
-    //    windows-in-flight (watermark delay / window width), not data
-    if (exists(spillPath)) {
-      val spilled = spark.read.parquet(spillPath)
-      val closed = spilled.select(col("win_us"), col("win_end_us")).distinct()
-        .filter(col("win_end_us") <= wmNow)
-        .select(col("win_us")).as[Long](org.apache.spark.sql.Encoders.scalaLong)
-        .collect()
-      if (closed.nonEmpty) {
-        val closedRows = spilled.filter(col("win_us").isin(closed.toIndexedSeq.map(Long.box): _*))
-        HeavyHitters.exactPerGroup(closedRows, "win_us" +: groupCols, col("item"), phiPpm, k)
-          .write.partitionBy("win_us")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(resultsPath)
-        val spillRoot = new org.apache.hadoop.fs.Path(spillPath)
-        val fs = spillRoot.getFileSystem(hconf)
-        closed.foreach { v =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$spillPath/win_us=$v"), true)
-        }
-      }
+    // 3. exact verify per closed window; the spill's partition
+    //    directories name its windows (no scan), so the closed list is
+    //    bounded by windows-in-flight (watermark delay / window width)
+    val windowUs = delayMicros(windowDur)
+    val closed = (if (fs.exists(spill)) fs.listStatus(spill).toSeq else Nil)
+      .map(_.getPath).filter(_.getName.startsWith("win_us="))
+      .filter(_.getName.stripPrefix("win_us=").toLong + windowUs <= wmNow)
+    if (closed.nonEmpty) {
+      // the spill's schema is known here: no inference job, and an empty
+      // window directory reads as no rows instead of failing
+      val closedRows = spark.read.schema(rows.schema.add("batch_id", "long"))
+        .option("basePath", spillPath).parquet(closed.map(_.toString): _*)
+      HeavyHitters.exactPerGroup(closedRows, "win_us" +: groupCols, col("item"), phiPpm, k)
+        .write.partitionBy("win_us")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").parquet(resultsPath)
+      closed.foreach(fs.delete(_, true))
     }
     ()
   }

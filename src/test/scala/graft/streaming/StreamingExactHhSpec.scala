@@ -157,15 +157,84 @@ class StreamingExactHhSpec extends AnyFunSuite {
         Seq((t, s"item${b % 3}")).toDF("ts", "item"),
         b.toLong, "ts", "item", "1 minute", delay, phiPpm = 500000L, k = 63, spill, res)
     }
-    def progFiles(): Int = new java.io.File(spill + ".progress").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(progFiles() <= 70, s"progress table not compacted: ${progFiles()} files")
+    // no progress table: the watermark rides the spill's commit log,
+    // which compacts itself like every append-once sink's log
+    assert(!new java.io.File(spill + ".progress").exists, "a .progress table was created")
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val logEntries = fs.listStatus(new org.apache.hadoop.fs.Path(s"$spill.batches")).length
+    assert(logEntries <= 2 * 64 + 2, s"commit log grew to $logEntries entries")
     // watermark still advances correctly: windows ended before
     // (last ts - 10 min) are closed and exact
     val closedWins = spark.read.parquet(res).select($"win_us".cast("long")).distinct().count()
     assert(closedWins >= 85, s"too few closed windows: $closedWins")
     spark.read.parquet(res).select($"item", $"cnt").as[(String, Long)].collect()
       .foreach { case (_, cnt) => assert(cnt == 1L) }
+  }
+
+  test("a torn spill append is redone whole: its partial rows never read as a replay") {
+    import spark.implicits._
+    val delay = StreamingPipeline.delayMicros("10 minutes")
+    val (rows, _) = fixture(5)
+    val batches = Seq(rows.take(1200).toDF("ts", "item"), rows.drop(1200).toDF("ts", "item"))
+    def run(spill: String, res: String, b: Int): Unit =
+      StreamingPipeline.processExactHhBatch(batches(b), b.toLong, "ts", "item", "1 minute",
+        delay, phiPpm, k, spill, res)
+    def spilled(spill: String): Seq[String] = spark.read.parquet(spill)
+      .select($"win_us".cast("long"), $"win_end_us", $"item", $"ts_us", $"batch_id")
+      .collect().map(_.toString).sorted.toSeq
+    val (cleanSpill, cleanRes) = (tmp("hh-torn-clean-spill"), tmp("hh-torn-clean-res"))
+    val (tornSpill, tornRes) = (tmp("hh-torn-spill"), tmp("hh-torn-res"))
+    run(cleanSpill, cleanRes, 0); run(cleanSpill, cleanRes, 1)
+    // no window closes in this fixture, so the spill keeps every row
+    run(tornSpill, tornRes, 0)
+    // batch 1 crashed after renaming its first file into one window's
+    // partition, before its commit record: some of its rows are on disk
+    val win1 = winUs("2025-01-01 00:01:00")
+    val partDir = tmp("hh-torn-part")
+    spark.read.parquet(cleanSpill).filter($"batch_id" === 1L && $"win_us" === win1)
+      .orderBy($"ts_us", $"item").limit(10).drop("win_us")
+      .coalesce(1).write.mode("overwrite").parquet(partDir)
+    val part = new java.io.File(partDir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath,
+      java.nio.file.Paths.get(s"$tornSpill/win_us=$win1/b1-0.parquet"))
+    run(tornSpill, tornRes, 1)
+    assert(spilled(tornSpill) == spilled(cleanSpill),
+      "the redo of a torn append must leave exactly one clean run's rows")
+  }
+
+  test("a steady-state batch in which no window closes runs at most 1 Spark job") {
+    import spark.implicits._
+    val (spill, res) = (tmp("hh-jobs-spill"), tmp("hh-jobs-res"))
+    val delay = StreamingPipeline.delayMicros("10 minutes")
+    def run(b: Int): Unit = StreamingPipeline.processExactHhBatch(
+      Seq((java.sql.Timestamp.valueOf(f"2025-01-01 00:0$b%d:30"), s"item$b")).toDF("ts", "item"),
+      b.toLong, "ts", "item", "1 minute", delay, phiPpm, k, spill, res)
+    (0 until 3).foreach(run)
+    val group = "exact-hh-steady-state"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group) { jobs.incrementAndGet(); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "one steady-state exact-HH batch")
+    try {
+      run(3)
+      // listener events are posted asynchronously: poll until quiet
+      var last = -1
+      var waited = 0
+      while (jobs.get != last && waited < 5000) {
+        last = jobs.get; Thread.sleep(200); waited += 200
+      }
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(!new java.io.File(res).list().exists(_.startsWith("win_us=")),
+      "the fixture must close no window")
+    assert(jobs.get >= 1, "the listener did not see the spill write")
+    assert(jobs.get <= 1, s"a steady-state batch ran ${jobs.get} jobs")
   }
 
   test("late rows into a closed window are dropped, not re-opened") {

@@ -129,6 +129,32 @@ class StreamingSelfIndexSpec extends AnyFunSuite {
     assert(readDecisions(decisions) == got, "replayed decisions must be identical")
   }
 
+  test("a torn sketch append is redone whole: its partial rows never read as a replay") {
+    def run(root: String, b: Int, part: Seq[(Long, String)]): Unit =
+      StreamingPipeline.processDedupIndexBatch(
+        spark.createDataFrame(spark.sparkContext.parallelize(
+          part.map(d => org.apache.spark.sql.Row(d._1, d._2))), schema),
+        b.toLong, "doc_id", "text", n = 3, k = 16, bandSize = 4,
+        minJaccardPpm = 600000L, sketchPath = s"$root/sketch", decisionsPath = s"$root/decisions")
+    def sketchRows(root: String): Seq[String] =
+      spark.read.parquet(s"$root/sketch").collect().map(_.toString).sorted.toSeq
+    val (clean, torn) = (tmp("sidx-torn-clean"), tmp("sidx-torn"))
+    Seq(f1, f2, f3).zipWithIndex.foreach { case (p, b) => run(clean, b, p) }
+    run(torn, 0, f1)
+    // batch 1 crashed after renaming its first file into the sketch,
+    // before its commit record: one of its signatures is on disk
+    val partDir = tmp("sidx-torn-part")
+    spark.read.parquet(s"$clean/sketch").filter(col("batch_id") === 1L)
+      .orderBy(col("doc")).limit(1).coalesce(1).write.mode("overwrite").parquet(partDir)
+    val part = new java.io.File(partDir).listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part.toPath, java.nio.file.Paths.get(s"$torn/sketch/b1-0.parquet"))
+    run(torn, 1, f2)
+    run(torn, 2, f3)
+    assert(sketchRows(torn) == sketchRows(clean),
+      "the redo of a torn append must leave exactly one clean run's rows")
+    assert(readDecisions(s"$torn/decisions") == readDecisions(s"$clean/decisions"))
+  }
+
   test("survivor set is slicing-invariant on bridge-free random corpora") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
