@@ -5,63 +5,39 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.operators.{ExactPercentiles, PairingJoin, Sessionize}
 
+/** One output table of an analytic: its name, the tables it reads
+  * besides `events`, and how to build it from `events` and a lookup of
+  * those reads. A table is the pipeline's one unit of scheduling and of
+  * sharing: [[Pipeline]] writes a table once every table it reads has
+  * been written, and hands its build the STORED tables — the reference's
+  * "store once, read downstream" boundary (`internal/storage/mongo.go:70-77`),
+  * never a cached frame. */
+final case class Table(name: String, reads: String*)(
+    val build: (DataFrame, String => DataFrame) => DataFrame)
+
 /** The reference's 9 analytics plugins (SURVEY.md §2.5-§2.6) re-expressed as
   * distributed DataFrame jobs over the normalized events table.
   *
-  * Each analytic is `run(events) => Seq[(tableName, DataFrame)]` — the Spark
-  * analog of the plugin interface (`pkg/pluginsdk/interfaces.go:10-19`);
-  * [[Pipeline]] writes each pair to the warehouse, mirroring
-  * `StoreResults` (`internal/storage/mongo.go:70-77`).
+  * Each analytic declares its [[Table]]s — the Spark analog of the plugin
+  * interface (`pkg/pluginsdk/interfaces.go:10-19`); [[Pipeline]] writes
+  * each to the warehouse, mirroring `StoreResults`
+  * (`internal/storage/mongo.go:70-77`).
   *
   * Deliberate deviations from the reference's order-dependent in-memory
   * machines are rationalized to deterministic relational semantics and
   * documented per analytic (SURVEY §7.4-3).
   */
-/** Per-run registry for frames an analytic `persist()`s while building
-  * its sinks' plans (e.g. the network-latency matched sets). One tracker
-  * per analytic per pipeline run, released by the CALLER after that
-  * analytic's tables are written — scoping the persisted-frame lifetime
-  * to the run, so two concurrent `Pipeline.run`s in one JVM can never
-  * unpersist each other's frames mid-query. */
-final class FrameTracker {
-  private val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
-  def track(df: DataFrame): DataFrame = synchronized { frames += df; df }
-  def release(): Unit = synchronized {
-    frames.foreach(_.unpersist(blocking = false))
-    frames.clear()
-  }
-}
-
 trait Analytic {
   def name: String
+  def tables: Seq[Table]
 
-  /** Standalone entry: any frames persisted for the sinks' plans stay
-    * cached for the session (callers that care call [[runFrom]] with a
-    * [[FrameTracker]] and release it themselves). */
-  def run(events: DataFrame): Seq[(String, DataFrame)]
-
-  /** The pipeline's entry. It may REUSE result tables already
-    * materialized by earlier analytics of the same pipeline run (keyed by
-    * table name) — the "store once, read downstream" boundary extended to
-    * derived tables — and registers the frames it persists on `tracker`,
-    * which the caller releases once the sinks are written. Default: the
-    * self-contained [[run]] (as in the reference's independent plugins);
-    * composites like TracerEvents override to avoid recomputing a
-    * sibling's machine, and analytics that persist override to track. */
-  def runFrom(events: DataFrame, stored: Map[String, DataFrame],
-              tracker: FrameTracker): Seq[(String, DataFrame)] =
-    run(events)
-
-  /** Names of the sibling ANALYTICS whose stored tables [[runFrom]]
-    * consumes. The pipeline schedules this analytic only after every
-    * named sibling (that is enabled in the run) has written its tables —
-    * the dependency is DECLARED here instead of hardcoded by object
-    * identity in the scheduler, so a future analytic that reads stored
-    * siblings cannot silently land in the independent pool and recompute
-    * (or diverge from) its inputs. A named sibling that is NOT enabled
-    * in the run is simply absent from `stored` and [[runFrom]] falls
-    * back to computing — the historical behavior. */
-  def dependsOn: Set[String] = Set.empty
+  /** Every table as a lazy frame over `events`, without writing: each
+    * read is built from its producer's declaration (this analytic's
+    * tables first, then [[Analytics.all]]'s). */
+  def run(events: DataFrame): Seq[(String, DataFrame)] = {
+    def read(t: String): DataFrame = Analytics.producer(t, tables).build(events, read)
+    tables.map(t => t.name -> t.build(events, read))
+  }
 }
 
 object Analytics {
@@ -82,13 +58,11 @@ object Analytics {
     * keep the 11 consensus lifecycle event types, drop P2P send/receive. */
   object ConsensusSteps extends Analytic {
     val name = "consensus_steps"
-    def run(events: DataFrame): Seq[(String, DataFrame)] = Seq(
-      name -> events
-        .filter(col("event_type").isin(lifecycleTypes: _*))
-        .select("event_type", "ts", "ts_ns", "node_id", "validator_address",
-          "height", "round", "step", "proposer", "is_our_turn", "hash",
-          "timeout_step", "duration_ms")
-    )
+    val tables = Seq(Table(name)((events, _) => events
+      .filter(col("event_type").isin(lifecycleTypes: _*))
+      .select("event_type", "ts", "ts_ns", "node_id", "validator_address",
+        "height", "round", "step", "proposer", "is_our_turn", "hash",
+        "timeout_step", "duration_ms")))
   }
 
   /** vote_latencies (J1, `ossplugins/vote-latency/processor.go:26-65`):
@@ -105,7 +79,8 @@ object Analytics {
     * carrying the last confirming receive's ts/latency. */
   object VoteLatency extends Analytic {
     val name = "vote_latency"
-    def run(events: DataFrame): Seq[(String, DataFrame)] = {
+    val tables = Seq(Table("vote_latencies")((events, _) => latencies(events)))
+    private def latencies(events: DataFrame): DataFrame = {
       val sends = events.filter(col("event_type") === "send_vote").select(
         col("vote.height").as("height"), col("vote.round").as("round"),
         col("vote.validatorIndex").as("val_idx"),
@@ -120,7 +95,7 @@ object Analytics {
         sends, recvs, Seq("height", "round", "val_idx", "sender", "receiver"),
         "sent_ns", "received_ns", Seq("vote"))
         .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))
-      Seq("vote_latencies" -> confirmed)
+      confirmed
     }
   }
 
@@ -129,7 +104,8 @@ object Analytics {
     * receiver) — same faithful confirm-on-receive semantics. */
   object BlockParts extends Analytic {
     val name = "block_parts"
-    def run(events: DataFrame): Seq[(String, DataFrame)] = {
+    val tables = Seq(Table("block_part_latencies")((events, _) => latencies(events)))
+    private def latencies(events: DataFrame): DataFrame = {
       val sends = events.filter(col("event_type") === "send_block_part").select(
         col("decoded.height").as("height"), col("decoded.round").as("round"),
         col("decoded.partIndex").as("part_index"),
@@ -144,7 +120,7 @@ object Analytics {
         sends, recvs, Seq("height", "round", "part_index", "sender", "receiver"),
         "sent_ns", "received_ns")
         .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))
-      Seq("block_part_latencies" -> confirmed)
+      confirmed
     }
   }
 
@@ -199,9 +175,11 @@ object Analytics {
           col("ts_ns"))
     }
 
-    def run(events: DataFrame): Seq[(String, DataFrame)] = {
+    val tables = Seq(Table(name)((events, _) => confirmed(events)))
+
+    private def confirmed(events: DataFrame): DataFrame = {
       val s = sides(events)
-      val confirmed = PairingJoin.confirmEitherOrder(
+      PairingJoin.confirmEitherOrder(
           s.filter(col("side") === "send").withColumnRenamed("ts_ns", "sent_ns"),
           s.filter(col("side") === "recv").withColumnRenamed("ts_ns", "received_ns"),
           Seq("msg_family", "key", "sender", "receiver"), "sent_ns", "received_ns")
@@ -209,7 +187,6 @@ object Analytics {
         .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))
         .select("msg_family", "sender", "receiver", "height",
           "sent_ns", "received_ns", "latency_ms")
-      Seq(name -> confirmed)
     }
   }
 
@@ -231,7 +208,9 @@ object Analytics {
       "entering_prevote_wait", "entering_precommit", "entering_precommit_wait",
       "entering_commit", "committed_block")
 
-    def run(events: DataFrame): Seq[(String, DataFrame)] = {
+    val tables = Seq(Table(name)((events, _) => timing(events)))
+
+    private def timing(events: DataFrame): DataFrame = {
       val stepName = when(col("event_type") === "entering_new_round", "new_round")
         .when(col("event_type") === "propose_step", "propose")
         .when(col("event_type") === "entering_prevote_step", "entering_prevote")
@@ -283,7 +262,7 @@ object Analytics {
               concat(col("prev_step"), lit("_to_"), col("step_name")).as("key"),
               expr("(ts_ns - prev_ts) div 1000000").as("value"))))
 
-      val timing = withDur
+      withDur
         .groupBy("node_id", "height", "round")
         .agg(
           max(col("validator_address")).as("validator_address"),
@@ -299,7 +278,6 @@ object Analytics {
         .withColumn("end_ns", coalesce(col("commit_ns"), col("max_ns")))
         .withColumn("total_round_time_ms", expr("(end_ns - start_ns) div 1000000"))
         .drop("new_round_ns", "min_ns", "commit_ns", "max_ns")
-      Seq(name -> timing)
     }
   }
 
@@ -323,7 +301,8 @@ object Analytics {
     * <= 1 s, int-division averages — matches the reference exactly. */
   object ValidatorParticipation extends Analytic {
     val name = "validator_participation"
-    def run(events: DataFrame): Seq[(String, DataFrame)] = {
+    val tables = Seq(Table(name)((events, _) => participation(events)))
+    private def participation(events: DataFrame): DataFrame = {
       val stepStarts = events
         .filter(col("event_type").isin("entering_prevote_step", "entering_precommit_step"))
         .groupBy("node_id", "height", "round")
@@ -340,7 +319,7 @@ object Analytics {
             expr("(ts_ns - prevote_start_ns) div 1000000"))
             .when(col("vote_type") === "precommit" && col("precommit_start_ns").isNotNull,
               expr("(ts_ns - precommit_start_ns) div 1000000")))
-      val stats = votes
+      votes
         .groupBy("height", "round", "validator_address")
         .agg(
           max(col("node_id")).as("node_id"),
@@ -367,7 +346,6 @@ object Analytics {
         .withColumn("on_time_prevote", coalesce(col("last_prevote_latency") <= 1000L, lit(false)))
         .withColumn("on_time_precommit", coalesce(col("last_precommit_latency") <= 1000L, lit(false)))
         .drop("last_prevote_latency", "last_precommit_latency")
-      Seq(name -> stats)
     }
   }
 
@@ -399,13 +377,14 @@ object Analytics {
       * a later TrySend does not look back at pending receives. That is
       * [[PairingJoin.fifoAtArrival]], not rank-FIFO.
       *
-      * Unmatched accounting (`finalizeStats`, `:449-476`): a fallback-
-      * matched receive is never removed from `pendingReceives`, so the
-      * reference counts it BOTH as a measurement and as an unmatched
-      * receive. Faithfully: unmatched receives = ALL pass-1 residual
-      * receives, whether or not pass 2 matched them. Unmatched sends =
-      * pass-2 residual no-peer sends + composite-keyed sends that found no
-      * receive (those never enter the fallback pool).
+      * Unmatched accounting (`finalizeStats`, `:449-476`) is derived from
+      * the measurements by [[nodeStats]] and [[globalStats]]: each
+      * measurement consumes exactly one send, so a node's unmatched sends
+      * are its sends minus the measurements it sent. A fallback-matched
+      * receive is never removed from `pendingReceives`, so the reference
+      * counts it BOTH as a measurement and as an unmatched receive:
+      * faithfully, a node's unmatched receives are its receives minus the
+      * `exact` measurements it received.
       *
       * Documented rationalization: a receive that fallback-matches and is
       * LATER claimed by an out-of-order composite-key send double-counts in
@@ -413,55 +392,31 @@ object Analytics {
       * when a TrySend and a direct send share raw bytes). Here a receive
       * yields at most one measurement — the composite-key match wins.
       *
-      * @return (measurements, unmatchedSends(node_id, msg_type),
-      *         unmatchedRecvs(node_id, msg_type))
+      * @return the measurements
       */
-    private[graft] def fifoMatch(sends: DataFrame, recvs: DataFrame,
-                                 tracker: FrameTracker = new FrameTracker)
-        : (DataFrame, DataFrame, DataFrame) = {
+    private[graft] def fifoMatch(sends: DataFrame, recvs: DataFrame): DataFrame = {
       val keys = Seq("sender", "receiver", "raw_hash")
-      // Both pairing products feed FIVE output tables (measurements, two
-      // percentile rollups, node stats, global stats) — materialize each
-      // ONCE instead of recomputing the window+join DAG per sink.
-      // MEMORY_AND_DISK: spills instead of OOMing when the matched set is
-      // events-sized at cluster scale (the round-6 profile had the five
-      // sinks recomputing this 5x — 6.4 s of the fixture pipeline's 19 s).
       val m1 = PairingJoin.fifo(
         sends.withColumnRenamed("msg_type", "send_msg_type"),
         recvs.withColumnRenamed("msg_type", "recv_msg_type"),
         keys, Seq("sent_ns"), Seq("received_ns"), "full_outer")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      tracker.track(m1)
       val matched1 = m1.filter(col("sent_ns").isNotNull && col("received_ns").isNotNull)
         .withColumn("match_type", lit("exact"))
-      val unSends = m1.filter(col("received_ns").isNull)
-        .select(col("sender"), col("receiver"), col("raw_hash"),
-          col("send_msg_type"), col("sent_ns"))
-      val unRecvs = m1.filter(col("sent_ns").isNull)
-        .select(col("sender"), col("receiver"), col("raw_hash"),
-          col("recv_msg_type"), col("received_ns"))
-
       val noPeer = col("receiver").isNull || col("receiver") === ""
-      val fallbackSends = unSends.filter(noPeer)
-      val directUnmatchedSends = unSends.filter(!noPeer)
-      val m2 = PairingJoin.fifoAtArrival(
-        fallbackSends.withColumnRenamed("sender", "send_sender").withColumnRenamed("receiver", "send_receiver"),
-        unRecvs.withColumnRenamed("sender", "recv_sender").withColumnRenamed("receiver", "recv_receiver"),
-        Seq("raw_hash"), "sent_ns", "received_ns")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      tracker.track(m2)
-      val matched2 = m2.filter(col("sent_ns").isNotNull && col("received_ns").isNotNull)
+      val fallbackSends = m1.filter(col("received_ns").isNull && noPeer)
+        .select(col("sender").as("send_sender"), col("receiver").as("send_receiver"),
+          col("raw_hash"), col("send_msg_type"), col("sent_ns"))
+      val unRecvs = m1.filter(col("sent_ns").isNull)
+        .select(col("sender").as("recv_sender"), col("receiver").as("recv_receiver"),
+          col("raw_hash"), col("recv_msg_type"), col("received_ns"))
+      val matched2 = PairingJoin.fifoAtArrival(fallbackSends, unRecvs,
+          Seq("raw_hash"), "sent_ns", "received_ns")
+        .filter(col("sent_ns").isNotNull && col("received_ns").isNotNull)
         .withColumn("sender", coalesce(col("send_sender"), col("recv_sender")))
         .withColumn("receiver", coalesce(col("recv_receiver"), col("send_receiver")))
         .withColumn("match_type", lit("hash_fallback"))
-      val unmatchedSends = m2.filter(col("received_ns").isNull)
-        .select(col("send_sender").as("node_id"), col("send_msg_type").as("msg_type"))
-        .unionByName(directUnmatchedSends
-          .select(col("sender").as("node_id"), col("send_msg_type").as("msg_type")))
-      val unmatchedRecvs = unRecvs
-        .select(col("receiver").as("node_id"), col("recv_msg_type").as("msg_type"))
 
-      val measurements = matched1
+      matched1
         .select("sender", "receiver", "raw_hash", "send_msg_type", "sent_ns", "received_ns", "match_type")
         .unionByName(matched2.select("sender", "receiver", "raw_hash", "send_msg_type",
           "sent_ns", "received_ns", "match_type"))
@@ -471,21 +426,18 @@ object Analytics {
         // (`:166`, `:283`) — events process in global time order, so the
         // later timestamp is always the minuend (round-2 audit).
         .withColumn("latency_ms", expr("abs(received_ns - sent_ns) div 1000000"))
-      (measurements, unmatchedSends, unmatchedRecvs)
     }
 
-    def run(events: DataFrame): Seq[(String, DataFrame)] =
-      runFrom(events, Map.empty, new FrameTracker)
-
-    override def runFrom(events: DataFrame, stored: Map[String, DataFrame],
-                         tracker: FrameTracker): Seq[(String, DataFrame)] = {
-      val sends = events.filter(col("event_type").startsWith("send_"))
+    private def sends(events: DataFrame): DataFrame =
+      events.filter(col("event_type").startsWith("send_"))
         .select(
           col("node_id").as("sender"), col("recipient_peer_id").as("receiver"),
           sha2(col("msg_bytes"), 256).as("raw_hash"),
           regexp_replace(col("event_type"), "^send_", "").as("msg_type"),
           col("ts_ns").as("sent_ns"))
-      val recvs = events.filter(col("event_type").startsWith("receive_packet_"))
+
+    private def recvs(events: DataFrame): DataFrame =
+      events.filter(col("event_type").startsWith("receive_packet_"))
         .filter(col("source_peer_id") =!= col("node_id")) // P6 self-communication filter (:222-225)
         .select(
           col("source_peer_id").as("sender"), col("node_id").as("receiver"),
@@ -493,64 +445,65 @@ object Analytics {
           regexp_replace(col("event_type"), "^receive_packet_", "").as("msg_type"),
           col("ts_ns").as("received_ns"))
 
-      val (rawMeasurements, unmatchedSends, unmatchedRecvs) = fifoMatch(sends, recvs, tracker)
-      // The matched measurement set feeds FOUR consumers (its own sink,
-      // both percentile rollups, the global totals) — materialize it once
-      // on top of the already-persisted m1/m2 so each sink's job starts
-      // at the cached rows instead of re-running the union+latency chain.
-      val measurements = tracker.track(
-        rawMeasurements.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-      // A3: per-(normalized pair, msg_type) exact-percentile histograms.
-      val paired = measurements
-        .withColumn("pair", concat_ws("|",
-          least(col("sender"), col("receiver")), greatest(col("sender"), col("receiver"))))
-      val pairHists = ExactPercentiles.histogram(paired, Seq("pair", "msg_type"), col("latency_ms"))
-
-      // A4: overall histogram per pair over all message types.
-      val pairOverall = ExactPercentiles.histogram(paired, Seq("pair"), col("latency_ms"))
-        .withColumn("msg_type", lit("overall"))
-      val nodepairSummary = pairHists.unionByName(pairOverall)
-
-      // A5: per-node stats incl. connected peers and unmatched counts.
-      // ONE union + ONE groupBy instead of four per-side aggregations
-      // stitched by three full_outer/left joins: every branch is a narrow
-      // tagged projection, so the whole table costs a single shuffle on
-      // node_id (conditional aggregates; collect_set skips the nulls the
-      // when()s produce) — the same rows either way, one exchange instead
-      // of seven at any scale.
-      val nodeEvents = sends
-        .select(col("sender").as("node_id"), col("receiver").as("peer"), lit("send").as("kind"))
+    /** Every send, receive and measurement as one tagged row of the node
+      * it counts for, the peer and its `kind`: "send", "recv", a
+      * measurement's match_type (counted for its sender) or "exact_recv"
+      * (an exact measurement, counted for its receiver). */
+    private def traffic(sends: DataFrame, recvs: DataFrame, measurements: DataFrame): DataFrame =
+      sends.select(col("sender").as("node_id"), col("receiver").as("peer"), lit("send").as("kind"))
         .unionByName(recvs
           .select(col("receiver").as("node_id"), col("sender").as("peer"), lit("recv").as("kind")))
-        .unionByName(unmatchedSends
-          .select(col("node_id"), lit(null).cast("string").as("peer"), lit("us").as("kind")))
-        .unionByName(unmatchedRecvs
-          .select(col("node_id"), lit(null).cast("string").as("peer"), lit("ur").as("kind")))
-      val nodeStats = nodeEvents
+        .unionByName(measurements
+          .select(col("sender").as("node_id"), col("receiver").as("peer"), col("match_type").as("kind")))
+        .unionByName(measurements.filter(col("match_type") === "exact")
+          .select(col("receiver").as("node_id"), col("sender").as("peer"), lit("exact_recv").as("kind")))
+
+    private def counted(kind: String): Column = count(when(col("kind") === kind, true))
+
+    /** A5: per-node stats incl. connected peers and unmatched counts, as
+      * ONE union + ONE groupBy (a single shuffle on node_id). Unmatched
+      * sends = sends − measurements sent; unmatched receives = receives −
+      * `exact` measurements received (see [[fifoMatch]]). */
+    private[graft] def nodeStats(sends: DataFrame, recvs: DataFrame, measurements: DataFrame): DataFrame =
+      traffic(sends, recvs, measurements)
         .groupBy("node_id")
         .agg(
-          sum(when(col("kind") === "send", 1L).otherwise(0L)).as("total_sends"),
+          counted("send").as("total_sends"),
           collect_set(when(col("kind") === "send", col("peer"))).as("send_peers"),
-          sum(when(col("kind") === "recv", 1L).otherwise(0L)).as("total_receives"),
+          counted("recv").as("total_receives"),
           collect_set(when(col("kind") === "recv", col("peer"))).as("recv_peers"),
-          sum(when(col("kind") === "us", 1L).otherwise(0L)).as("unmatched_sends"),
-          sum(when(col("kind") === "ur", 1L).otherwise(0L)).as("unmatched_receives"))
+          (counted("send") - counted("exact") - counted("hash_fallback")).as("unmatched_sends"),
+          (counted("recv") - counted("exact_recv")).as("unmatched_receives"))
         .withColumn("connected_peers",
           array_sort(array_union(col("send_peers"), col("recv_peers"))))
         .withColumn("connected_peer_count", size(col("connected_peers")).cast("long"))
         .drop("send_peers", "recv_peers")
 
-      // A6: single global row.
-      val globalStats = measurements.agg(count(lit(1)).as("total_matched"))
-        .crossJoin(unmatchedSends.agg(count(lit(1)).as("total_unmatched_sends")))
-        .crossJoin(unmatchedRecvs.agg(count(lit(1)).as("total_unmatched_receives")))
+    /** A6: the single global row, by the same subtraction as [[nodeStats]]. */
+    private def globalStats(sends: DataFrame, recvs: DataFrame, measurements: DataFrame): DataFrame =
+      traffic(sends, recvs, measurements)
+        .agg(
+          (counted("exact") + counted("hash_fallback")).as("total_matched"),
+          (counted("send") - counted("exact") - counted("hash_fallback")).as("total_unmatched_sends"),
+          (counted("recv") - counted("exact_recv")).as("total_unmatched_receives"))
 
-      // A7: duplicate-traffic diagnostics (keys seen more than once per side).
-      val dupKeys = sends
+    /** A3: per-(normalized pair, msg_type) exact-percentile histograms,
+      * plus A4: the overall histogram per pair over all message types. */
+    private def nodepairSummary(measurements: DataFrame): DataFrame = {
+      val paired = measurements
+        .withColumn("pair", concat_ws("|",
+          least(col("sender"), col("receiver")), greatest(col("sender"), col("receiver"))))
+      ExactPercentiles.histogram(paired, Seq("pair", "msg_type"), col("latency_ms"))
+        .unionByName(ExactPercentiles.histogram(paired, Seq("pair"), col("latency_ms"))
+          .withColumn("msg_type", lit("overall")))
+    }
+
+    /** A7: duplicate-traffic diagnostics (keys seen more than once per side). */
+    private def duplicates(events: DataFrame): DataFrame =
+      sends(events)
         .select(col("sender"), col("receiver"), col("raw_hash"), col("sent_ns").as("ts_ns"),
           lit("send").as("side"))
-        .unionByName(recvs.select(col("sender"), col("receiver"), col("raw_hash"),
+        .unionByName(recvs(events).select(col("sender"), col("receiver"), col("raw_hash"),
           col("received_ns").as("ts_ns"), lit("receive").as("side")))
         .groupBy("sender", "receiver", "raw_hash")
         .agg(
@@ -559,31 +512,39 @@ object Analytics {
           min(col("ts_ns")).as("first_seen_ns"), max(col("ts_ns")).as("last_seen_ns"))
         .filter(col("send_count") > 1 || col("receive_count") > 1)
 
-      Seq(
-        "network_latency_measurements"     -> measurements,
-        "network_latency_nodepair_summary" -> nodepairSummary,
-        "network_latency_node_stats"       -> nodeStats,
-        "network_latency_global_stats"     -> globalStats,
-        "network_latency_duplicates_debug" -> dupKeys)
-    }
+    private val Measurements = "network_latency_measurements"
+
+    /** The measurements are written once and every other table that needs
+      * them reads the stored table; none reads another derived table, so
+      * the critical path is two writes deep. */
+    val tables = Seq(
+      Table(Measurements)((events, _) => fifoMatch(sends(events), recvs(events))),
+      Table("network_latency_nodepair_summary", Measurements)((_, read) =>
+        nodepairSummary(read(Measurements))),
+      Table("network_latency_node_stats", Measurements)((events, read) =>
+        nodeStats(sends(events), recvs(events), read(Measurements))),
+      Table("network_latency_global_stats", Measurements)((events, read) =>
+        globalStats(sends(events), recvs(events), read(Measurements))),
+      Table("network_latency_duplicates_debug")((events, _) => duplicates(events)))
   }
 
   /** timeout_analysis (A8-A10+J6, `ossplugins/timeout-analysis/processor.go`):
     * enriched timeout events (step-start join J6 `:101-110`, recovery flag
     * A9 `:201-208` via a bounded self-join on the last 3 rounds), per-node
-    * aggregate analysis (A8 `:217-239`), and gaps-and-islands timeout
-    * clusters (A10 `:180-199`, gap <= 30 s AND height delta <= 5, >= 3). */
+    * aggregate analysis (A8 `:217-239`) over the stored enriched events,
+    * and gaps-and-islands timeout clusters (A10 `:180-199`, gap <= 30 s
+    * AND height delta <= 5, >= 3). */
   object TimeoutAnalysis extends Analytic {
     val name = "timeout_analysis"
-    def run(events: DataFrame): Seq[(String, DataFrame)] =
-      runFrom(events, Map.empty, new FrameTracker)
-    override def runFrom(events: DataFrame, stored: Map[String, DataFrame],
-                         tracker: FrameTracker): Seq[(String, DataFrame)] = {
-      val timeouts = events.filter(col("event_type") === "scheduled_timeout")
+
+    private def scheduledTimeouts(events: DataFrame): DataFrame =
+      events.filter(col("event_type") === "scheduled_timeout")
         .select(col("node_id"), col("validator_address"), col("height"),
           col("round"), col("timeout_step").as("step"), col("duration_ms"),
           col("ts_ns"))
 
+    private def enrichedEvents(events: DataFrame): DataFrame = {
+      val timeouts = scheduledTimeouts(events)
       // J6: step starts per (node, height, round, step-kind).
       val stepStarts = events
         .filter(col("event_type").isin(
@@ -604,7 +565,7 @@ object Analytics {
       // height on the same node, strictly before this event.
       val prior = timeouts.select(col("node_id"), col("height"),
         col("round").as("p_round"), col("ts_ns").as("p_ts_ns"))
-      val recovery = enriched.alias("t")
+      enriched.alias("t")
         .join(prior.alias("p"),
           col("t.node_id") === col("p.node_id") &&
             col("t.height") === col("p.height") &&
@@ -619,18 +580,15 @@ object Analytics {
           col("t.time_in_step_ms").as("time_in_step_ms"))
         .agg(count(col("p.p_ts_ns")).as("prior_timeouts"))
         .withColumn("is_recovery_timeout", col("prior_timeouts") >= 2)
-        // feeds BOTH the enriched-events sink and the per-node analysis
-        // rollup — materialize the join+window chain once per run
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      tracker.track(recovery)
+    }
 
-      // A10: clusters per node (time gap AND height delta predicate).
-      val tagged = Sessionize.assign(
-        timeouts, Seq("node_id"), Seq("ts_ns"),
-        breakWhen = prev =>
-          (col("ts_ns") - prev("ts_ns") > 30000000000L) ||
-            (col("height") - prev("height") > 5L))
-      val clusters = tagged
+    /** A10: clusters per node (time gap AND height delta predicate). */
+    private def clusters(events: DataFrame): DataFrame =
+      Sessionize.assign(
+          scheduledTimeouts(events), Seq("node_id"), Seq("ts_ns"),
+          breakWhen = prev =>
+            (col("ts_ns") - prev("ts_ns") > 30000000000L) ||
+              (col("height") - prev("height") > 5L))
         .groupBy("node_id", "session_id")
         .agg(
           min(col("height")).as("start_height"), max(col("height")).as("end_height"),
@@ -640,11 +598,12 @@ object Analytics {
         .filter(col("timeout_count") >= 3)
         .withColumn("duration_ms", expr("(end_ns - start_ns) div 1000000"))
 
-      // A8: per-node aggregate (the reference emits one per run; we emit
-      // one per node — the multi-node generalization).
+    /** A8: per-node aggregate (the reference emits one per run; we emit
+      * one per node — the multi-node generalization). */
+    private def analysis(events: DataFrame, enriched: DataFrame): DataFrame = {
       val totalRounds = events.filter(col("event_type") === "entering_new_round")
         .groupBy("node_id").agg(count(lit(1)).as("total_rounds"))
-      val analysis = recovery
+      enriched
         .groupBy("node_id")
         .agg(
           max(col("validator_address")).as("validator_address"),
@@ -667,43 +626,40 @@ object Analytics {
             col("total_timeouts").cast("double") / col("total_rounds").cast("double")))
         .withColumn("height_range",
           concat(col("min_height"), lit("-"), col("max_height")))
-
-      Seq(
-        "timeout_events"   -> recovery,
-        "timeout_analysis" -> analysis,
-        "timeout_clusters" -> clusters)
     }
+
+    val tables = Seq(
+      Table("timeout_events")((events, _) => enrichedEvents(events)),
+      Table(name, "timeout_events")((events, read) => analysis(events, read("timeout_events"))),
+      Table("timeout_clusters")((events, _) => clusters(events)))
   }
 
   /** tracer_events (O2, `ossplugins/tracer-events/plugin.go:48-73`): union
     * of the consensus lifecycle stream and the p2p confirmed stream,
-    * re-sorted by timestamp. */
+    * re-sorted by timestamp. It reads the consensus_steps and p2p_messages
+    * tables, so the 8-family p2p machine runs once per pipeline. */
   object TracerEvents extends Analytic {
     val name = "tracer_events"
-    override val dependsOn: Set[String] = Set("consensus_steps", "p2p_messages")
-    def run(events: DataFrame): Seq[(String, DataFrame)] =
-      runFrom(events, Map.empty, new FrameTracker)
-    /** The consensus and p2p sides come from the sibling analytics'
-      * STORED tables when the pipeline already wrote them (the round-6
-      * profile had the full 8-family p2p machine running twice per
-      * pipeline); standalone runs fall back to computing them. */
-    override def runFrom(events: DataFrame, stored: Map[String, DataFrame],
-                         tracker: FrameTracker): Seq[(String, DataFrame)] = {
-      val consensus = stored.getOrElse("consensus_steps", ConsensusSteps.run(events).head._2)
+    val tables = Seq(Table(name, "consensus_steps", "p2p_messages") { (_, read) =>
+      val consensus = read("consensus_steps")
         .withColumn("stream", lit("consensus"))
         .withColumn("sort_ns", col("ts_ns"))
-      val p2p = stored.getOrElse("p2p_messages", P2pMessages.run(events).head._2)
+      val p2p = read("p2p_messages")
         .withColumn("stream", lit("p2p"))
         .withColumn("event_type", concat(lit("p2p_"), col("msg_family")))
         .withColumn("sort_ns", col("received_ns"))
-      Seq(name -> consensus.unionByName(p2p, allowMissingColumns = true)
-        .orderBy(col("sort_ns")))
-    }
+      consensus.unionByName(p2p, allowMissingColumns = true).orderBy(col("sort_ns"))
+    })
   }
 
   val all: Seq[Analytic] = Seq(
     ConsensusSteps, VoteLatency, BlockParts, P2pMessages, ConsensusTiming,
     ValidatorParticipation, NetworkLatency, TimeoutAnalysis, TracerEvents)
+
+  /** The declaration of `table`: among `first`, else among [[all]]'s. */
+  def producer(table: String, first: Seq[Table] = Nil): Table =
+    (first.iterator ++ all.iterator.flatMap(_.tables)).find(_.name == table).getOrElse(
+      throw new IllegalArgumentException(s"no analytic declares table '$table'"))
 
   /** Plugin enablement by name — the reference's YAML plugin list
     * (`internal/config/config.go:48-63`); an empty selection enables the

@@ -21,7 +21,8 @@ import graft.DriverPool
   * The events table is materialized ONCE (parquet) and each analytic reads
   * from it — mirroring the reference's "store events, then dispatch to
   * plugins" boundary while letting each analytic job prune columns and push
-  * filters into its own scan.
+  * filters into its own scan. A table that reads another table (see
+  * [[Table]]) reads it the same way, from the warehouse.
   */
 object Pipeline {
 
@@ -34,10 +35,20 @@ object Pipeline {
 
   def run(spark: SparkSession, logDir: String, warehouse: String,
           analytics: Seq[Analytic] = Analytics.all): Map[String, Long] = {
-    // Two copies of one analytic would race two overwrites of its tables.
-    val names = analytics.map(_.name)
+    // Two writers of one table would race two overwrites of it.
+    val tables = analytics.flatMap(_.tables)
+    val names = tables.map(_.name)
     val repeated = names.diff(names.distinct).distinct
-    require(repeated.isEmpty, s"Pipeline: analytics named more than once: ${repeated.mkString(", ")}")
+    require(repeated.isEmpty, s"Pipeline: tables written more than once: ${repeated.mkString(", ")}")
+    // The tables of this run that a table waits for: its reads, where a
+    // read no table of this run writes is built inline from its
+    // producer's declaration, so that producer's reads count instead.
+    // Resolved before anything is read, so an undeclared read fails fast.
+    val inRun = names.toSet
+    def waitsFor(t: Table): Set[String] =
+      t.reads.toSet.flatMap((r: String) => if (inRun(r)) Set(r) else waitsFor(Analytics.producer(r)))
+    val waits = tables.map(t => t.name -> waitsFor(t)).toMap
+    val readers = tables.flatMap(t => waits(t.name).map(_ -> t)).groupMap(_._1)(_._2)
     val raw    = LogIngest.read(spark, logDir)
     val events = Normalize.normalize(raw)
 
@@ -64,44 +75,25 @@ object Pipeline {
       "events", "event_type")
     val stored = spark.read.parquet(s"$warehouse/events")
 
-    // Later analytics may read the tables earlier ones wrote (runFrom):
-    // the tracer unions the stored consensus + p2p tables instead of
-    // re-running both machines. An analytic starts once every enabled
-    // sibling it `dependsOn` has written all its tables; a dependency
-    // that is not enabled is absent from `written`, and runFrom computes
-    // it instead. The read-back is lazy (schema from the footer, no job).
-    val written = new ConcurrentHashMap[String, DataFrame]()
-    val enabled = analytics.map(_.name).toSet
-    val waiting = analytics.map(a => a.name -> new AtomicInteger(a.dependsOn.count(enabled))).toMap
-    val dependents = analytics.flatMap(a => a.dependsOn.filter(enabled).map(_ -> a))
-      .groupMap(_._1)(_._2)
-    def sink(table: String, df: DataFrame): Unit = {
-      write(df, table)
-      written.put(table, spark.read.parquet(s"$warehouse/$table"))
-      ()
-    }
+    // A table starts once every table it waits for is written, and its
+    // build reads those back from the warehouse. Only a table that some
+    // table waits for is read back (lazily: one footer-schema job each).
+    val readBack = new ConcurrentHashMap[String, DataFrame]()
+    def read(table: String): DataFrame =
+      Option(readBack.get(table)).getOrElse(Analytics.producer(table).build(stored, read))
+    val waiting = tables.map(t => t.name -> new AtomicInteger(waits(t.name).size)).toMap
     DriverPool(Width) { pool =>
-      // An analytic writes its first sink, which materializes the frames
-      // it persists on its tracker; its other sinks then reuse them as
-      // separate tasks. The tracker is released once all have ended.
-      def start(a: Analytic): Unit = pool.submit {
-        val tracker = new FrameTracker
-        val rest = try {
-          val inputs = if (a.dependsOn.isEmpty) Map.empty[String, DataFrame] else written.asScala.toMap
-          val tables = a.runFrom(stored, inputs, tracker)
-          tables.headOption.foreach((sink _).tupled)
-          tables.drop(1)
-        } catch { case t: Throwable => tracker.release(); throw t }
-        pool.submitAll(rest.map { case (t, df) => () => sink(t, df) }) { ok =>
-          tracker.release()
-          if (ok) dependents.getOrElse(a.name, Nil)
-            .foreach(d => if (waiting(d.name).decrementAndGet() == 0) start(d))
+      def start(t: Table): Unit = pool.submit {
+        write(t.build(stored, read), t.name)
+        readers.get(t.name).foreach { rs =>
+          readBack.put(t.name, spark.read.parquet(s"$warehouse/${t.name}"))
+          rs.foreach(r => if (waiting(r.name).decrementAndGet() == 0) start(r))
         }
       }
-      analytics.filter(a => waiting(a.name).get == 0).foreach(start)
+      tables.filter(t => waits(t.name).isEmpty).foreach(start)
     }
-    val stuck = analytics.filter(a => waiting(a.name).get > 0).map(_.name)
-    require(stuck.isEmpty, s"Pipeline: ${stuck.mkString(", ")} never started: their dependsOn forms a cycle")
+    val stuck = tables.filter(t => waiting(t.name).get > 0).map(_.name)
+    require(stuck.isEmpty, s"Pipeline: ${stuck.mkString(", ")} never started: their reads form a cycle")
     observed.asScala.map { case (table, obs) => table -> rowCount(table, obs) }.toMap
   }
 

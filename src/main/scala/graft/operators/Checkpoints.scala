@@ -60,4 +60,13 @@ object Checkpoints {
     case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
     case _              => ()
   }
+
+  /** [[free]] every checkpoint that `df`'s plan reads: the release for an
+    * eager operator's result (e.g. [[HeavyHitters.exactPerGroup]]) whose
+    * staged tables outlive the call, once that result has been written.
+    * Only checkpointed RDDs are touched; any other leaf keeps its blocks. */
+  def freeAll(df: DataFrame): Unit = df.queryExecution.analyzed.foreach {
+    case lr: LogicalRDD if lr.rdd.isCheckpointed => lr.rdd.unpersist(blocking = false)
+    case _                                       => ()
+  }
 }

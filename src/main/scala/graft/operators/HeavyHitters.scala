@@ -79,7 +79,9 @@ object HeavyHitters {
     * flow through here (the streaming face is
     * [[graft.streaming.StreamingPipeline]]'s per-closed-window sink,
     * which calls this on each closed batch) and fails loudly below
-    * rather than with an opaque checkpoint error.
+    * rather than with an opaque checkpoint error. The staged candidates
+    * stay cached until the caller releases them with
+    * [[Checkpoints.freeAll]] on the returned frame, once it is written.
     *
     * @return (groupCols..., item, cnt, ppm) — exact counts within group
     */

@@ -1184,10 +1184,11 @@ object StreamingPipeline {
       // window directory reads as no rows instead of failing
       val closedRows = spark.read.schema(rows.schema.add("batch_id", "long"))
         .option("basePath", spillPath).parquet(closed.map(_.toString): _*)
-      HeavyHitters.exactPerGroup(closedRows, "win_us" +: groupCols, col("item"), phiPpm, k)
-        .write.partitionBy("win_us")
+      val verified = HeavyHitters.exactPerGroup(closedRows, "win_us" +: groupCols, col("item"), phiPpm, k)
+      try verified.write.partitionBy("win_us")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(resultsPath)
+      finally graft.operators.Checkpoints.freeAll(verified) // the staged candidates
       closed.foreach(fs.delete(_, true))
     }
     ()

@@ -7,9 +7,10 @@ import graft.operators.PairingJoin
 /** J4 parity: a sequential mini-port of the reference network-latency
   * matcher (`ossplugins/network-latency/processor.go:122-328,449-476`)
   * replays random event streams and must agree with the relational two-pass
-  * formulation ([[Analytics.NetworkLatency.fifoMatch]]) on measurements AND
-  * unmatched accounting — the same pattern that guards the J1/J3 machines
-  * in PairingJoinSpec.
+  * formulation on measurements ([[Analytics.NetworkLatency.fifoMatch]]) AND
+  * on each node's unmatched accounting, which the node-stats table derives
+  * from the measurements ([[Analytics.NetworkLatency.nodeStats]]) — the
+  * same pattern that guards the J1/J3 machines in PairingJoinSpec.
   *
   * Generator guards (documented rationalizations stay out of the random
   * runs, mirroring PairingJoinSpec):
@@ -148,11 +149,11 @@ class NetworkLatencySimSpec extends AnyFunSuite {
       }
       // finalizeStats: EVERY leftover pending receive counts as unmatched —
       // including fallback-matched ones (never removed from the map)
-      val wantUnmatchedRecvs = pendingRecvs.toSeq
-        .flatMap { case ((_, r, _), q) => q.map(_ => r) }
-        .sorted
-      val wantUnmatchedSends = (pendingSends.toSeq.flatMap { case ((s, _, _), q) => q.map(_ => s) } ++
-        rawPool.toSeq.flatMap { case (_, q) => q.map(_._2) }).sorted
+      def perNode(nodes: Seq[String]) = nodes.groupBy(identity).map { case (n, ns) => n -> ns.size.toLong }
+      val wantUnmatchedRecvs = perNode(pendingRecvs.toSeq
+        .flatMap { case ((_, r, _), q) => q.map(_ => r) })
+      val wantUnmatchedSends = perNode(pendingSends.toSeq.flatMap { case ((s, _, _), q) => q.map(_ => s) } ++
+        rawPool.toSeq.flatMap { case (_, q) => q.map(_._2) })
       val wantMeas = meas.sortBy(m => (m._4, m._5, m._1)).toSeq
 
       // ---- relational formulation
@@ -167,18 +168,20 @@ class NetworkLatencySimSpec extends AnyFunSuite {
       }.toSeq
       val sendsDF = sendRows.toDF("sender", "receiver", "raw_hash", "msg_type", "sent_ns")
       val recvsDF = recvRows.toDF("sender", "receiver", "raw_hash", "msg_type", "received_ns")
-      val (mdf, usdf, urdf) = Analytics.NetworkLatency.fifoMatch(sendsDF, recvsDF)
+      val mdf = Analytics.NetworkLatency.fifoMatch(sendsDF, recvsDF)
 
       val gotMeas = mdf.select("sender", "receiver", "raw_hash", "sent_ns", "received_ns", "match_type")
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4), r.getString(5)))
         .sortBy(m => (m._4, m._5, m._1)).toSeq
-      val gotUnmatchedSends = usdf.collect().map(_.getString(0)).sorted.toSeq
-      val gotUnmatchedRecvs = urdf.collect().map(_.getString(0)).sorted.toSeq
+      val stats = Analytics.NetworkLatency.nodeStats(sendsDF, recvsDF, mdf)
+        .select("node_id", "unmatched_sends", "unmatched_receives").collect()
+      def got(i: Int) = stats.map(r => r.getString(0) -> r.getLong(i)).toMap.filter(_._2 != 0)
+      val (gotUnmatchedSends, gotUnmatchedRecvs) = (got(1), got(2))
 
       assert(gotMeas == wantMeas, s"trial $trial measurements")
-      assert(gotUnmatchedSends == wantUnmatchedSends.toSeq, s"trial $trial unmatched sends")
-      assert(gotUnmatchedRecvs == wantUnmatchedRecvs.toSeq, s"trial $trial unmatched receives")
+      assert(gotUnmatchedSends == wantUnmatchedSends, s"trial $trial unmatched sends per node")
+      assert(gotUnmatchedRecvs == wantUnmatchedRecvs, s"trial $trial unmatched receives per node")
       assert(wantMeas.nonEmpty && wantUnmatchedRecvs.nonEmpty)
       fallbackMatches += wantMeas.count(_._6 == "hash_fallback")
     }

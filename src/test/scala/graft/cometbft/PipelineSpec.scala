@@ -372,45 +372,102 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     dir
   }
 
-  /** A stub analytic writing the given tables (by name → frame builder). */
-  private def stub(n: String, deps: Set[String] = Set.empty)(
-      tables: Map[String, DataFrame] => Seq[(String, DataFrame)]): Analytic = new Analytic {
+  /** A stub analytic declaring the given tables. */
+  private def stub(n: String)(ts: Table*): Analytic = new Analytic {
     val name = n
-    override val dependsOn = deps
-    def run(events: DataFrame) = runFrom(events, Map.empty, new FrameTracker)
-    override def runFrom(events: DataFrame, stored: Map[String, DataFrame],
-                         tracker: FrameTracker) = tables(stored)
+    val tables = ts
   }
 
   test("a failing sink is rethrown after every started write ends; its dependents never run") {
     val wh = tmp("graft-fail-wh")
     val slowRow = udf((id: Long) => { Thread.sleep(2000); id })
-    val slow = stub("slow")(_ => Seq("slow_out" -> spark.range(1).select(slowRow(col("id")).as("id"))))
-    val bad = stub("bad")(_ => Seq("bad_out" -> spark.range(3)
+    val slow = stub("slow")(Table("slow_out")((_, _) => spark.range(1).select(slowRow(col("id")).as("id"))))
+    val bad = stub("bad")(Table("bad_out")((_, _) => spark.range(3)
       .select(col("id"), assert_true(col("id") < 0, lit("sink boom")).isNull.as("ok"))))
-    val ranDependent = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val after = stub("after_bad", Set("bad")) { _ => ranDependent.set(true); Nil }
+    val ranReader = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val after = stub("after_bad")(Table("after_out", "bad_out") { (_, read) =>
+      ranReader.set(true); read("bad_out")
+    })
     val ex = intercept[Throwable](Pipeline.run(spark, smallLogs, wh, Seq(slow, bad, after)))
     def messages(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(ex).exists(_.contains("sink boom")), s"unexpected failure: $ex")
     assert(new java.io.File(s"$wh/slow_out/_SUCCESS").exists,
       "Pipeline.run returned while the slow sink was still writing")
-    assert(!ranDependent.get, "an analytic ran although its dependency failed")
+    assert(!ranReader.get, "a table was built although a table it reads failed")
   }
 
-  test("a dependsOn analytic receives its dependency's stored table") {
+  test("a reading table receives its input's stored table") {
     val wh = tmp("graft-dep-wh")
-    var seen = Map.empty[String, DataFrame]
-    val first = stub("first")(_ => Seq("first_out" -> spark.range(5).toDF("id")))
-    val second = stub("second", Set("first")) { stored =>
-      seen = stored
-      Seq("second_out" -> stored("first_out").withColumn("twice", col("id") * 2))
-    }
+    var seen: DataFrame = null
+    val first = stub("first")(Table("first_out")((_, _) => spark.range(5).toDF("id")))
+    val second = stub("second")(Table("second_out", "first_out") { (_, read) =>
+      seen = read("first_out")
+      seen.withColumn("twice", col("id") * 2)
+    })
     val counts = Pipeline.run(spark, smallLogs, wh, Seq(second, first))
-    assert(seen.keySet == Set("first_out"))
-    assert(seen("first_out").inputFiles.forall(_.contains("first_out")))
+    assert(seen.inputFiles.nonEmpty && seen.inputFiles.forall(_.contains(s"$wh/first_out/")),
+      s"read a frame that is not the stored table: ${seen.inputFiles.mkString(", ")}")
     assert(counts("first_out") == 5L && counts("second_out") == 5L)
+  }
+
+  test("a read cycle fails loudly, naming the tables on it") {
+    val wh = tmp("graft-cycle-wh")
+    val loop = stub("loop")(
+      Table("a_out", "b_out")((_, read) => read("b_out")),
+      Table("b_out", "a_out")((_, read) => read("a_out")))
+    val ex = intercept[IllegalArgumentException](Pipeline.run(spark, smallLogs, wh, Seq(loop)))
+    assert(ex.getMessage.contains("cycle") && ex.getMessage.contains("a_out") &&
+      ex.getMessage.contains("b_out"), ex.getMessage)
+    assert(!new java.io.File(s"$wh/a_out").exists && !new java.io.File(s"$wh/b_out").exists)
+  }
+
+  test("a run with only TracerEvents enabled writes the full run's tracer_events rows") {
+    val wh = tmp("graft-tracer-wh")
+    val counts = Pipeline.run(spark, logs5, wh, Seq(Analytics.TracerEvents))
+    assert(counts.keySet == Set("events", "tracer_events"))
+    val alone = spark.read.parquet(s"$wh/tracer_events")
+    val full = t("tracer_events")
+    assert(alone.schema.toDDL == full.schema.toDDL)
+    assert(alone.count() > 0 && alone.exceptAll(full).isEmpty && full.exceptAll(alone).isEmpty)
+  }
+
+  test("no analytic table's plan reads a cached frame, and building them caches nothing") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    spark.catalog.clearCache()
+    val events = Normalize.normalize(LogIngest.read(spark, logs5))
+    val tables = Analytics.all.flatMap(_.run(events))
+    assert(tables.size == 15)
+    tables.foreach { case (name, df) =>
+      val cached = df.queryExecution.optimizedPlan.collect { case r: InMemoryRelation => r }
+      assert(cached.isEmpty, s"$name reads ${cached.size} cached frame(s)")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty, "building the tables left frames cached")
+  }
+
+  test("Pipeline.run's only jobs outside a SQL execution are its read-backs") {
+    // each read-back infers its schema from the footers in a job of its
+    // own: `events`, plus every table that some table reads
+    val readBacks = 1 + Analytics.all.flatMap(_.tables).flatMap(_.reads).distinct.size
+    val loose = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        started.incrementAndGet()
+        if (j.properties == null || j.properties.getProperty("spark.sql.execution.id") == null)
+          loose.incrementAndGet()
+        ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Pipeline.run(spark, smallLogs, tmp("graft-loose-wh"))
+      // listener events are posted asynchronously: poll until quiet
+      var last = -1
+      while (started.get != last) { last = started.get; Thread.sleep(500) }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(started.get > readBacks, "the listener saw no pipeline jobs")
+    assert(loose.get <= readBacks, s"${loose.get} jobs ran outside a SQL execution; $readBacks read-backs")
   }
 
   test("two concurrent Pipeline.runs in one session each count their own tables") {

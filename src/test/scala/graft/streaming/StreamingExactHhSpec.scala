@@ -237,6 +237,27 @@ class StreamingExactHhSpec extends AnyFunSuite {
     assert(jobs.get <= 1, s"a steady-state batch ran ${jobs.get} jobs")
   }
 
+  test("window-closing batches free their staged candidates: cached RDDs do not grow") {
+    import spark.implicits._
+    val (spill, res) = (tmp("hh-free-spill"), tmp("hh-free-res"))
+    val delay = StreamingPipeline.delayMicros("0 seconds")
+    // batch b's rows sit in minute b, so from batch 1 on each batch's own
+    // event time closes the previous batch's window
+    def run(b: Int): Unit = StreamingPipeline.processExactHhBatch(
+      Seq((java.sql.Timestamp.valueOf(f"2025-01-01 00:0$b%d:30"), s"item$b")).toDF("ts", "item"),
+      b.toLong, "ts", "item", "1 minute", delay, phiPpm, k, spill, res)
+    def closed = new java.io.File(res).list().count(_.startsWith("win_us="))
+    run(0)
+    run(1)
+    assert(closed == 1, "the first closing batch closed no window")
+    val cachedAfterFirst = spark.sparkContext.getPersistentRDDs.size
+    (2 to 5).foreach(run)
+    assert(closed == 5, "every batch must close one window")
+    val cached = spark.sparkContext.getPersistentRDDs.size
+    assert(cached <= cachedAfterFirst,
+      s"cached RDDs grew from $cachedAfterFirst to $cached over 4 window-closing batches")
+  }
+
   test("late rows into a closed window are dropped, not re-opened") {
     import spark.implicits._
     val (spill, res) = (tmp("hh-late-spill"), tmp("hh-late-res"))

@@ -113,7 +113,7 @@ class StreamingRandomParitySpec extends AnyFunSuite {
         .select($"source_peer_id".as("sender"), $"node_id".as("receiver"),
           org.apache.spark.sql.functions.sha2($"msg_bytes", 256).as("raw_hash"),
           org.apache.spark.sql.functions.lit("vote").as("msg_type"), $"ts_ns".as("received_ns"))
-      val (meas, _, _) = graft.cometbft.Analytics.NetworkLatency.fifoMatch(sends, recvs)
+      val meas = graft.cometbft.Analytics.NetworkLatency.fifoMatch(sends, recvs)
       val batch = meas.select("raw_hash", "sender", "receiver", "sent_ns", "received_ns", "match_type")
         .collect().map(key).sorted.toSeq
       assert(streamed.nonEmpty && streamed == batch, s"trial $trial")
