@@ -65,64 +65,59 @@ object Analytics {
         "timeout_step", "duration_ms")))
   }
 
-  /** vote_latencies (J1, `ossplugins/vote-latency/processor.go:26-65`):
-    * send_vote / receive_packet_vote pairing on (height, round, valIdx,
-    * sender, receiver) via the faithful overwrite-on-send machine
-    * ([[PairingJoin.confirmOnReceive]]): every receive after the first
-    * event at its key confirms against the last send before it; a
+  /** Who sent and who received a `send_*` or `receive_packet_*` event,
+    * and its `side`: a send goes from this node to its recipient peer
+    * (null or "" when the log names none), a receive from its source peer
+    * to this node. */
+  private val direction: Seq[Column] = {
+    val isSend = col("event_type").startsWith("send_")
+    Seq(when(isSend, col("node_id")).otherwise(col("source_peer_id")).as("sender"),
+      when(isSend, col("recipient_peer_id")).otherwise(col("node_id")).as("receiver"),
+      when(isSend, "send").otherwise("recv").as("side"))
+  }
+
+  /** The confirm-on-receive latency analytics (J1, J2): one message
+    * family's sends and receives as ONE tagged projection, [[sides]],
+    * paired per (`keys`, sender, receiver) by the faithful overwrite-on-send
+    * machine ([[PairingJoin.confirmOnReceive]]): every receive after the
+    * first event at its key confirms against the last send before it; a
     * receive-created entry confirms later receives with NULL sent time
     * (reference computes latency from Go's zero time there — documented
     * rationalization) but DOES emit the entry-creating first receive's
-    * Vote payload, as the reference does (`processor.go:37`). The
-    * reference's pointer aliasing (`processor.go:43-45`) is replicated:
-    * an entry confirmed k times between sends yields k identical rows
-    * carrying the last confirming receive's ts/latency. */
-  object VoteLatency extends Analytic {
-    val name = "vote_latency"
-    val tables = Seq(Table("vote_latencies")((events, _) => latencies(events)))
-    private def latencies(events: DataFrame): DataFrame = {
-      val sends = events.filter(col("event_type") === "send_vote").select(
-        col("vote.height").as("height"), col("vote.round").as("round"),
-        col("vote.validatorIndex").as("val_idx"),
-        col("node_id").as("sender"), col("recipient_peer_id").as("receiver"),
-        col("ts_ns").as("sent_ns"), col("vote").as("vote"))
-      val recvs = events.filter(col("event_type") === "receive_packet_vote").select(
-        col("vote.height").as("height"), col("vote.round").as("round"),
-        col("vote.validatorIndex").as("val_idx"),
-        col("source_peer_id").as("sender"), col("node_id").as("receiver"),
-        col("ts_ns").as("received_ns"), col("vote").as("vote"))
-      val confirmed = PairingJoin.confirmOnReceive(
-        sends, recvs, Seq("height", "round", "val_idx", "sender", "receiver"),
-        "sent_ns", "received_ns", Seq("vote"))
-        .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))
-      confirmed
-    }
+    * `carry` payload, as the reference does (`vote-latency/processor.go:37`).
+    * The reference's pointer aliasing (`processor.go:43-45`) is
+    * replicated: an entry confirmed k times between sends yields k
+    * identical rows carrying the last confirming receive's ts/latency. */
+  sealed abstract class ConfirmOnReceive(val name: String, table: String, family: String,
+      keys: Seq[(String, Column)], carry: Seq[String]) extends Analytic {
+
+    /** Every send and receive of the family as one tagged row: the key
+      * columns, sender, receiver, side ("send" or "recv"), ts_ns and the
+      * carry. Shared by the batch table and
+      * [[graft.streaming.StreamingPipeline.voteLatencyStream]]. */
+    def sides(events: DataFrame): DataFrame =
+      events.filter(col("event_type").isin(s"send_$family", s"receive_packet_$family"))
+        .select((keys.map { case (k, c) => c.as(k) } ++ direction :+ col("ts_ns")) ++
+          carry.map(col): _*)
+
+    val tables = Seq(Table(table)((events, _) =>
+      PairingJoin.confirmOnReceive(sides(events), keys.map(_._1) :+ "sender" :+ "receiver", carry)
+        .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))))
   }
 
+  /** vote_latencies (J1, `ossplugins/vote-latency/processor.go:26-65`):
+    * send_vote / receive_packet_vote confirmed on (height, round, valIdx,
+    * sender, receiver), carrying the entry's Vote. */
+  object VoteLatency extends ConfirmOnReceive("vote_latency", "vote_latencies", "vote",
+    Seq("height" -> col("vote.height"), "round" -> col("vote.round"),
+      "val_idx" -> col("vote.validatorIndex")), carry = Seq("vote"))
+
   /** block_part_latencies (J2, `ossplugins/block-parts/processor.go:43-90`):
-    * the identical machine keyed by (height, round, partIndex, sender,
-    * receiver) — same faithful confirm-on-receive semantics. */
-  object BlockParts extends Analytic {
-    val name = "block_parts"
-    val tables = Seq(Table("block_part_latencies")((events, _) => latencies(events)))
-    private def latencies(events: DataFrame): DataFrame = {
-      val sends = events.filter(col("event_type") === "send_block_part").select(
-        col("decoded.height").as("height"), col("decoded.round").as("round"),
-        col("decoded.partIndex").as("part_index"),
-        col("node_id").as("sender"), col("recipient_peer_id").as("receiver"),
-        col("ts_ns").as("sent_ns"))
-      val recvs = events.filter(col("event_type") === "receive_packet_block_part").select(
-        col("decoded.height").as("height"), col("decoded.round").as("round"),
-        col("decoded.partIndex").as("part_index"),
-        col("source_peer_id").as("sender"), col("node_id").as("receiver"),
-        col("ts_ns").as("received_ns"))
-      val confirmed = PairingJoin.confirmOnReceive(
-        sends, recvs, Seq("height", "round", "part_index", "sender", "receiver"),
-        "sent_ns", "received_ns")
-        .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))
-      confirmed
-    }
-  }
+    * the same machine over send_block_part / receive_packet_block_part,
+    * keyed by (height, round, partIndex, sender, receiver). */
+  object BlockParts extends ConfirmOnReceive("block_parts", "block_part_latencies", "block_part",
+    Seq("height" -> col("decoded.height"), "round" -> col("decoded.round"),
+      "part_index" -> col("decoded.partIndex")), carry = Nil)
 
   /** p2p_messages (J3, `ossplugins/p2p-messages/processor.go:39-341`):
     * confirmation for 8 message families in either arrival order via the
@@ -160,7 +155,6 @@ object Analytics {
       * [[graft.streaming.StreamingPipeline.p2pConfirmStream]]. */
     def sides(events: DataFrame): DataFrame = {
       val fam = col("msg_family")
-      val isSend = col("event_type").startsWith("send_")
       val key = coalesce(families.map { case (f, keys) =>
         when(fam === f, array(keys.map(_.cast("string")): _*))
       }: _*)
@@ -168,26 +162,15 @@ object Analytics {
         .filter(col("event_type").isin(
           families.flatMap { case (f, _) => Seq(s"send_$f", s"receive_packet_$f") }: _*))
         .withColumn("msg_family", regexp_replace(col("event_type"), "^(send|receive_packet)_", ""))
-        .select(fam, key.as("key"),
-          when(isSend, col("node_id")).otherwise(col("source_peer_id")).as("sender"),
-          when(isSend, col("recipient_peer_id")).otherwise(col("node_id")).as("receiver"),
-          when(isSend, "send").otherwise("recv").as("side"),
-          col("ts_ns"))
+        .select(Seq(fam, key.as("key")) ++ direction :+ col("ts_ns"): _*)
     }
 
-    val tables = Seq(Table(name)((events, _) => confirmed(events)))
-
-    private def confirmed(events: DataFrame): DataFrame = {
-      val s = sides(events)
-      PairingJoin.confirmEitherOrder(
-          s.filter(col("side") === "send").withColumnRenamed("ts_ns", "sent_ns"),
-          s.filter(col("side") === "recv").withColumnRenamed("ts_ns", "received_ns"),
-          Seq("msg_family", "key", "sender", "receiver"), "sent_ns", "received_ns")
+    val tables = Seq(Table(name)((events, _) =>
+      PairingJoin.confirmEitherOrder(sides(events), Seq("msg_family", "key", "sender", "receiver"))
         .withColumn("height", col("key")(0))
         .withColumn("latency_ms", expr("(received_ns - sent_ns) div 1000000"))
         .select("msg_family", "sender", "receiver", "height",
-          "sent_ns", "received_ns", "latency_ms")
-    }
+          "sent_ns", "received_ns", "latency_ms")))
   }
 
   /** consensus_timing (A1+J5, `ossplugins/consensus-timing/processor.go`):
@@ -359,7 +342,24 @@ object Analytics {
   object NetworkLatency extends Analytic {
     val name = "network_latency"
 
-    /** The J4 two-pass matcher, factored for the random-stream parity spec.
+    /** Every send, and every receive from another node (the P6
+      * self-communication filter, `processor.go:222-225`), as one tagged
+      * row: sender, receiver, side ("send" or "recv"), raw_hash (sha256 of
+      * the raw bytes), msg_type and ts_ns. A TrySend's receiver is null or
+      * "". Shared by every network_latency table and
+      * [[graft.streaming.StreamingPipeline.networkLatencyStream]]. */
+    def sides(events: DataFrame): DataFrame =
+      events
+        .filter(col("event_type").startsWith("send_") ||
+          (col("event_type").startsWith("receive_packet_") &&
+            col("source_peer_id") =!= col("node_id")))
+        .select(direction ++ Seq(
+          sha2(col("msg_bytes"), 256).as("raw_hash"),
+          regexp_replace(col("event_type"), "^(send|receive_packet)_", "").as("msg_type"),
+          col("ts_ns")): _*)
+
+    /** The J4 two-pass matcher over [[sides]], factored for the
+      * random-stream parity spec.
       *
       * Pass 1 — composite key (sender, receiver, raw_hash): the reference
       * machine is BIDIRECTIONAL (a receive pops the oldest pending send,
@@ -394,11 +394,11 @@ object Analytics {
       *
       * @return the measurements
       */
-    private[graft] def fifoMatch(sends: DataFrame, recvs: DataFrame): DataFrame = {
+    private[graft] def fifoMatch(sides: DataFrame): DataFrame = {
       val keys = Seq("sender", "receiver", "raw_hash")
-      val m1 = PairingJoin.fifo(
-        sends.withColumnRenamed("msg_type", "send_msg_type"),
-        recvs.withColumnRenamed("msg_type", "recv_msg_type"),
+      def side(s: String, ts: String) = sides.filter(col("side") === s)
+        .select((keys.map(col) :+ col("msg_type").as(s"${s}_msg_type")) :+ col("ts_ns").as(ts): _*)
+      val m1 = PairingJoin.fifo(side("send", "sent_ns"), side("recv", "received_ns"),
         keys, Seq("sent_ns"), Seq("received_ns"), "full_outer")
       val matched1 = m1.filter(col("sent_ns").isNotNull && col("received_ns").isNotNull)
         .withColumn("match_type", lit("exact"))
@@ -428,35 +428,21 @@ object Analytics {
         .withColumn("latency_ms", expr("abs(received_ns - sent_ns) div 1000000"))
     }
 
-    private def sends(events: DataFrame): DataFrame =
-      events.filter(col("event_type").startsWith("send_"))
-        .select(
-          col("node_id").as("sender"), col("recipient_peer_id").as("receiver"),
-          sha2(col("msg_bytes"), 256).as("raw_hash"),
-          regexp_replace(col("event_type"), "^send_", "").as("msg_type"),
-          col("ts_ns").as("sent_ns"))
-
-    private def recvs(events: DataFrame): DataFrame =
-      events.filter(col("event_type").startsWith("receive_packet_"))
-        .filter(col("source_peer_id") =!= col("node_id")) // P6 self-communication filter (:222-225)
-        .select(
-          col("source_peer_id").as("sender"), col("node_id").as("receiver"),
-          sha2(col("msg_bytes"), 256).as("raw_hash"),
-          regexp_replace(col("event_type"), "^receive_packet_", "").as("msg_type"),
-          col("ts_ns").as("received_ns"))
-
     /** Every send, receive and measurement as one tagged row of the node
-      * it counts for, the peer and its `kind`: "send", "recv", a
-      * measurement's match_type (counted for its sender) or "exact_recv"
-      * (an exact measurement, counted for its receiver). */
-    private def traffic(sends: DataFrame, recvs: DataFrame, measurements: DataFrame): DataFrame =
-      sends.select(col("sender").as("node_id"), col("receiver").as("peer"), lit("send").as("kind"))
-        .unionByName(recvs
-          .select(col("receiver").as("node_id"), col("sender").as("peer"), lit("recv").as("kind")))
+      * it counts for, the peer and its `kind`: a side's "send" or "recv"
+      * (counted for its sender or its receiver), a measurement's
+      * match_type (counted for its sender) or "exact_recv" (an exact
+      * measurement, counted for its receiver). */
+    private def traffic(sides: DataFrame, measurements: DataFrame): DataFrame = {
+      val isSend = col("side") === "send"
+      sides
+        .select(when(isSend, col("sender")).otherwise(col("receiver")).as("node_id"),
+          when(isSend, col("receiver")).otherwise(col("sender")).as("peer"), col("side").as("kind"))
         .unionByName(measurements
           .select(col("sender").as("node_id"), col("receiver").as("peer"), col("match_type").as("kind")))
         .unionByName(measurements.filter(col("match_type") === "exact")
           .select(col("receiver").as("node_id"), col("sender").as("peer"), lit("exact_recv").as("kind")))
+    }
 
     private def counted(kind: String): Column = count(when(col("kind") === kind, true))
 
@@ -464,8 +450,8 @@ object Analytics {
       * ONE union + ONE groupBy (a single shuffle on node_id). Unmatched
       * sends = sends − measurements sent; unmatched receives = receives −
       * `exact` measurements received (see [[fifoMatch]]). */
-    private[graft] def nodeStats(sends: DataFrame, recvs: DataFrame, measurements: DataFrame): DataFrame =
-      traffic(sends, recvs, measurements)
+    private[graft] def nodeStats(sides: DataFrame, measurements: DataFrame): DataFrame =
+      traffic(sides, measurements)
         .groupBy("node_id")
         .agg(
           counted("send").as("total_sends"),
@@ -480,8 +466,8 @@ object Analytics {
         .drop("send_peers", "recv_peers")
 
     /** A6: the single global row, by the same subtraction as [[nodeStats]]. */
-    private def globalStats(sends: DataFrame, recvs: DataFrame, measurements: DataFrame): DataFrame =
-      traffic(sends, recvs, measurements)
+    private def globalStats(sides: DataFrame, measurements: DataFrame): DataFrame =
+      traffic(sides, measurements)
         .agg(
           (counted("exact") + counted("hash_fallback")).as("total_matched"),
           (counted("send") - counted("exact") - counted("hash_fallback")).as("total_unmatched_sends"),
@@ -499,16 +485,12 @@ object Analytics {
     }
 
     /** A7: duplicate-traffic diagnostics (keys seen more than once per side). */
-    private def duplicates(events: DataFrame): DataFrame =
-      sends(events)
-        .select(col("sender"), col("receiver"), col("raw_hash"), col("sent_ns").as("ts_ns"),
-          lit("send").as("side"))
-        .unionByName(recvs(events).select(col("sender"), col("receiver"), col("raw_hash"),
-          col("received_ns").as("ts_ns"), lit("receive").as("side")))
+    private def duplicates(sides: DataFrame): DataFrame =
+      sides
         .groupBy("sender", "receiver", "raw_hash")
         .agg(
           sum(when(col("side") === "send", 1L).otherwise(0L)).as("send_count"),
-          sum(when(col("side") === "receive", 1L).otherwise(0L)).as("receive_count"),
+          sum(when(col("side") === "recv", 1L).otherwise(0L)).as("receive_count"),
           min(col("ts_ns")).as("first_seen_ns"), max(col("ts_ns")).as("last_seen_ns"))
         .filter(col("send_count") > 1 || col("receive_count") > 1)
 
@@ -518,14 +500,14 @@ object Analytics {
       * them reads the stored table; none reads another derived table, so
       * the critical path is two writes deep. */
     val tables = Seq(
-      Table(Measurements)((events, _) => fifoMatch(sends(events), recvs(events))),
+      Table(Measurements)((events, _) => fifoMatch(sides(events))),
       Table("network_latency_nodepair_summary", Measurements)((_, read) =>
         nodepairSummary(read(Measurements))),
       Table("network_latency_node_stats", Measurements)((events, read) =>
-        nodeStats(sends(events), recvs(events), read(Measurements))),
+        nodeStats(sides(events), read(Measurements))),
       Table("network_latency_global_stats", Measurements)((events, read) =>
-        globalStats(sends(events), recvs(events), read(Measurements))),
-      Table("network_latency_duplicates_debug")((events, _) => duplicates(events)))
+        globalStats(sides(events), read(Measurements))),
+      Table("network_latency_duplicates_debug")((events, _) => duplicates(sides(events))))
   }
 
   /** timeout_analysis (A8-A10+J6, `ossplugins/timeout-analysis/processor.go`):

@@ -103,29 +103,40 @@ object LogIngest {
   def readRaw(spark: SparkSession, dir: String): DataFrame =
     dispatch(readLines(spark, dir))
 
-  /** P7 per-file metadata (`app.go:77-86,103-108`): one row per file with
-    * its nodeID and validatorAddress; any file missing either value fails
-    * the job with the file name (the reference aborts the whole run,
-    * `app.go:97-99`).
+  /** P7 per-file metadata (`app.go:77-86,103-108`) of the dir's `.log`
+    * files: one row per file with its nodeID and validatorAddress; any
+    * file missing either value fails with the file name (the reference
+    * aborts the whole run, `app.go:97-99`). The one helper both the batch
+    * ([[read]]) and the streaming path attach metadata through, so both
+    * fail fast the same way, by two checks:
     *
-    * Fail-fast shape: the check is a `filter` on this tiny per-file
-    * aggregate, not a projected column on the joined output — Catalyst's
-    * ColumnPruning removes unread projections (a `raise_error` hidden in
-    * `withColumn` silently disappears under `count()`), but a filter
-    * condition must evaluate for every build-side row of the inner
-    * broadcast join in [[read]], whatever columns the consumer reads.
-    * The aggregate runs over ALL lines (metadata extraction is a cheap
-    * `when` per row and partial-agg state is one entry per file), so a
-    * file whose every line fails the P1/P2 drops still shows up here with
-    * null metadata and aborts, exactly like the reference. The one case
-    * this aggregate cannot see — a ZERO-LINE file, which produces no
-    * text-source rows at all — is caught by [[read]]'s driver-side
-    * listing check instead (a zero-line file is exactly a zero-byte file:
-    * any file with content, even a lone newline, yields at least one row
-    * here). */
-  def metadata(lines: DataFrame): DataFrame = {
+    *  - A driver-side listing check, at call time, for ZERO-LINE files: an
+    *    empty `.log` file yields no text-source rows, so the aggregate
+    *    below never sees it — but the reference still aborts on it (the
+    *    missing-ID check after scanning zero lines). File statuses come
+    *    from the same listing the scan uses (O(#files) driver metadata, no
+    *    data scan), so this adds no job and keeps the frame fully lazy. A
+    *    zero-line file is exactly a zero-byte file: any file with content,
+    *    even a lone newline, yields at least one row.
+    *  - A `filter` on the tiny per-file aggregate for every other file, not
+    *    a projected column on the joined output — Catalyst's ColumnPruning
+    *    removes unread projections (a `raise_error` hidden in `withColumn`
+    *    silently disappears under `count()`), but a filter condition must
+    *    evaluate for every build-side row of the inner broadcast join,
+    *    whatever columns the consumer reads. The aggregate runs over ALL
+    *    lines (metadata extraction is a cheap `when` per row and partial-agg
+    *    state is one entry per file), so a file whose every line fails the
+    *    P1/P2 drops still shows up here with null metadata and aborts,
+    *    exactly like the reference. */
+  def metadata(spark: SparkSession, dir: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val empties = fs.listStatus(path)
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".log") && s.getLen == 0)
+    require(empties.isEmpty,
+      s"node ID or validator address not found in ${empties.map(_.getPath.getName).mkString(", ")}")
     val msgLc = lower(get_json_object(col("value"), "$._msg"))
-    lines
+    readLines(spark, dir)
       .groupBy(col("src_file"))
       .agg(
         min(when(msgLc === "p2p node id",
@@ -142,22 +153,7 @@ object LogIngest {
 
   /** Ingest with P7 metadata attach: per-file nodeID/validatorAddress
     * broadcast-joined onto every row of that file. Inner join — every file
-    * is present in [[metadata]] or the job has already failed.
-    *
-    * The driver-side listing check closes the zero-line gap: an empty
-    * `.log` file yields no text-source rows, so [[metadata]] never sees
-    * it — but the reference still aborts on it (`app.go:97-99`, the
-    * missing-ID check after scanning zero lines). File statuses come from
-    * the same listing the scan uses (O(#files) driver metadata, no data
-    * scan), so this adds no job and keeps the frame fully lazy. */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val empties = fs.listStatus(path)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".log") && s.getLen == 0)
-    require(empties.isEmpty,
-      s"node ID or validator address not found in ${empties.map(_.getPath.getName).mkString(", ")}")
-    val lines = readLines(spark, dir)
-    dispatch(lines).join(broadcast(metadata(lines)), Seq("src_file"))
-  }
+    * is present in [[metadata]] or the job has already failed. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    dispatch(readLines(spark, dir)).join(broadcast(metadata(spark, dir)), Seq("src_file"))
 }

@@ -7,19 +7,31 @@ import org.apache.spark.sql.expressions.Window
 /** Stream-pairing operators — the relational re-expression of the
   * reference's in-memory pairing state machines (SURVEY.md §2.5).
   *
-  * The reference (`ossplugins/network-latency/processor.go:278-285`,
-  * `ossplugins/vote-latency/processor.go:26-65`) pairs a "send" stream
-  * against a "receive" stream keyed by composite keys, FIFO per key. In
-  * Spark that is a rank-paired equi-join: `row_number()` per (key, side)
-  * gives each occurrence an ordinal, and an equi-join on (key, ordinal)
-  * reproduces exact FIFO matching — fully distributed, one shuffle per
-  * side on the pairing key, no driver state.
+  * The reference (`ossplugins/network-latency/processor.go:122-328`,
+  * `ossplugins/vote-latency/processor.go:26-65`) reads ONE time-ordered
+  * event stream and branches on direction inside each per-key machine. The
+  * confirm machines ([[confirmOnReceive]], [[confirmEitherOrder]]) take
+  * that stream as it is: one frame of tagged rows, `side` ("send" or
+  * "recv") and `ts_ns`, replayed by windows partitioned on the key. The
+  * FIFO matchers ([[fifo]], [[fifoAtArrival]]) pair a left against a right
+  * frame: `row_number()` per (key, side) gives each occurrence an ordinal,
+  * and an equi-join on (key, ordinal) reproduces exact FIFO matching —
+  * fully distributed, one shuffle per side on the pairing key, no driver
+  * state.
   *
   * Scale note: both windows and the join shuffle on the same key columns,
   * so the exchange is reused across the window and join stages; skewed
   * keys are handled by AQE skew-join splitting.
   */
 object PairingJoin {
+
+  /** The confirm machines' event order: time, then sends before receives
+    * at one timestamp — the reference's global sort is unstable
+    * (`sort.Slice`), so this is the deterministic choice. A string `side`
+    * would sort "recv" first, so the tie order is explicit. */
+  private def eventOrder(keys: Seq[String]) =
+    Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("ts_ns").asc, when(col("side") === "send", 0).otherwise(1).asc)
 
   /** FIFO multiset pairing: the n-th `left` row is matched with the n-th
     * `right` row within each key group, each side ordered by `orderBy`
@@ -50,7 +62,8 @@ object PairingJoin {
   /** The faithful send/receive confirmation machine of the vote-latency
     * and block-parts processors (`vote-latency/processor.go:26-65`,
     * `block-parts/processor.go:43-73`), re-expressed as ONE window over
-    * the per-key event stream:
+    * the per-key event stream `sides` (`keys`, `side`, `ts_ns` and the
+    * `carry` columns):
     *
     *  - a send OVERWRITES the key's entry (`processor.go:52-53`);
     *  - a receive with NO prior event at the key creates the entry
@@ -69,73 +82,59 @@ object PairingJoin {
     *    creating event to the next overwriting send, which freezes the
     *    struct).
     *
-    * Ties at equal timestamp process sends before receives — the
-    * reference's global sort is unstable (`sort.Slice`), so this is the
-    * deterministic choice.
+    * Ties at equal timestamp process sends before receives ([[eventOrder]]).
     *
-    * `carry` columns (present in BOTH frames) ride along from the event
-    * that CREATED the key's current entry: the last send if any, else the
-    * FIRST receive — exactly the reference's `vl.Vote` (entry creation
-    * sets it, `processor.go:37,52`; a confirming receive never replaces
-    * it), so receive-only chains emit the first receive's payload, not
-    * NULL.
+    * `carry` columns ride along from the event that CREATED the key's
+    * current entry: the last send if any, else the FIRST receive — exactly
+    * the reference's `vl.Vote` (entry creation sets it, `processor.go:37,52`;
+    * a confirming receive never replaces it), so receive-only chains emit
+    * the first receive's payload, not NULL.
     *
-    * Relationally: union both sides, one window partitioned by key ordered
-    * by (ts, side) supplies "any prior event?", "last send ts" and the
-    * entry payload; a running count of sends assigns each event its epoch,
-    * and a second window over (key, epoch) — same shuffle key (hash
-    * partitioning on the key subset satisfies the clustering, so only an
-    * extra sort, no exchange) — replaces each confirming receive's ts with
-    * the epoch-final one. A single shuffle on the key, no join at all.
+    * Relationally: one window partitioned by key in event order supplies
+    * "any prior event?", "last send ts" and the entry payload; a running
+    * count of sends assigns each event its epoch, and a second window over
+    * (key, epoch) — same shuffle key (hash partitioning on the key subset
+    * satisfies the clustering, so only an extra sort, no exchange) —
+    * replaces each confirming receive's ts with the epoch-final one. A
+    * single shuffle on the key, no join at all.
+    *
+    * Output: one row per confirming receive — `keys`, `carry`, `sent_ns`
+    * and `received_ns`.
     */
   def confirmOnReceive(
-      sends: DataFrame,
-      receives: DataFrame,
+      sides: DataFrame,
       keys: Seq[String],
-      sendTs: String,
-      recvTs: String,
       carry: Seq[String] = Seq.empty
   ): DataFrame = {
-    val s = sends.select(
-      (keys.map(col) :+ col(sendTs).as("__ts") :+ lit(0).as("__side")) ++
-        carry.map(col): _*)
-    val r = receives.select(
-      (keys.map(col) :+ col(recvTs).as("__ts") :+ lit(1).as("__side")) ++
-        carry.map(col): _*)
-    val stream = s.unionByName(r)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__ts").asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wCum = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__ts").asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sentOfSide = when(col("__side") === 0, col("__ts"))
-    val withState = stream
+    val w = eventOrder(keys).rowsBetween(Window.unboundedPreceding, -1)
+    val wCum = eventOrder(keys).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val isSend = col("side") === "send"
+    val withState = sides.select(((keys :+ "side" :+ "ts_ns") ++ carry).map(col): _*)
       .withColumn("__prior", count(lit(1)).over(w))
-      .withColumn("__last_send", last(sentOfSide, ignoreNulls = true).over(w))
-      .withColumn("__epoch",
-        sum(when(col("__side") === 0, 1).otherwise(0)).over(wCum))
+      .withColumn("__last_send", last(when(isSend, col("ts_ns")), ignoreNulls = true).over(w))
+      .withColumn("__epoch", sum(when(isSend, 1).otherwise(0)).over(wCum))
     val carried = carry.foldLeft(withState) { (d, c) =>
       d.withColumn(c, coalesce(
-        last(when(col("__side") === 0, col(c)), ignoreNulls = true).over(w),
-        first(when(col("__side") === 1, col(c)), ignoreNulls = true).over(w)))
+        last(when(isSend, col(c)), ignoreNulls = true).over(w),
+        first(when(!isSend, col(c)), ignoreNulls = true).over(w)))
     }
     // The reference's aliasing: every appended row of an entry ends up with
     // the values of the LAST mutation — the final confirming receive of the
     // entry's epoch (whole-partition frame; no orderBy, so the frame spans
     // the full (key, epoch) group).
+    val confirms = !isSend && col("__prior") >= 1
     val wEpoch = Window.partitionBy((keys :+ "__epoch").map(col): _*)
     carried
-      .withColumn("__final_recv",
-        max(when(col("__side") === 1 && col("__prior") >= 1, col("__ts"))).over(wEpoch))
-      .filter(col("__side") === 1 && col("__prior") >= 1)
-      .withColumn(sendTs, col("__last_send"))
-      .withColumn(recvTs, col("__final_recv"))
-      .drop("__ts", "__side", "__prior", "__last_send", "__epoch", "__final_recv")
+      .withColumn("__final_recv", max(when(confirms, col("ts_ns"))).over(wEpoch))
+      .filter(confirms)
+      .withColumn("sent_ns", col("__last_send"))
+      .withColumn("received_ns", col("__final_recv"))
+      .drop("ts_ns", "side", "__prior", "__last_send", "__epoch", "__final_recv")
   }
 
   /** The faithful either-order confirmation machine of the p2p-messages
-    * processor (`p2p-messages/processor.go:78-110` per family): like
+    * processor (`p2p-messages/processor.go:78-110` per family) over the
+    * per-key event stream `sides` (`keys`, `side`, `ts_ns`): like
     * [[confirmOnReceive]], but a SEND can also confirm — when the key's
     * entry is in Received state (a receive arrived first), the send emits
     * a confirmation against the entry-creating FIRST receive (latency
@@ -149,33 +148,27 @@ object PairingJoin {
     *  - a receive whose priors are only receives hits a nil-interface
     *    type assertion in the reference (`processor.go:102` — it would
     *    panic); rationalized here to a NULL sent time confirmation;
-    *  - ties at equal timestamp process sends first.
+    *  - ties at equal timestamp process sends first ([[eventOrder]]).
+    *
+    * One window pass and one filter: each confirming event, of either
+    * side, becomes one row of `keys`, `sent_ns` and `received_ns`.
     */
-  def confirmEitherOrder(
-      sends: DataFrame,
-      receives: DataFrame,
-      keys: Seq[String],
-      sendTs: String,
-      recvTs: String
-  ): DataFrame = {
-    val s = sends.select(keys.map(col) :+ col(sendTs).as("__ts") :+ lit(0).as("__side"): _*)
-    val r = receives.select(keys.map(col) :+ col(recvTs).as("__ts") :+ lit(1).as("__side"): _*)
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("__ts").asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val st = s.unionByName(r)
-      .withColumn("__prior_s", count(when(col("__side") === 0, 1)).over(w))
-      .withColumn("__prior_r", count(when(col("__side") === 1, 1)).over(w))
-      .withColumn("__last_send", last(when(col("__side") === 0, col("__ts")), ignoreNulls = true).over(w))
-      .withColumn("__first_recv", min(when(col("__side") === 1, col("__ts"))).over(w))
-    val recvConfirm = st.filter(col("__side") === 1 && (col("__prior_s") >= 1 || col("__prior_r") >= 1))
-      .withColumn(sendTs, col("__last_send")) // NULL when no prior send (reference panic, rationalized)
-      .withColumn(recvTs, col("__ts"))
-    val sendConfirm = st.filter(col("__side") === 0 && col("__prior_s") === 0 && col("__prior_r") >= 1)
-      .withColumn(sendTs, col("__ts"))
-      .withColumn(recvTs, col("__first_recv"))
-    recvConfirm.unionByName(sendConfirm)
-      .drop("__ts", "__side", "__prior_s", "__prior_r", "__last_send", "__first_recv")
+  def confirmEitherOrder(sides: DataFrame, keys: Seq[String]): DataFrame = {
+    val w = eventOrder(keys).rowsBetween(Window.unboundedPreceding, -1)
+    val isSend = col("side") === "send"
+    sides.select((keys :+ "side" :+ "ts_ns").map(col): _*)
+      .withColumn("__prior_s", count(when(isSend, 1)).over(w))
+      .withColumn("__prior_r", count(when(!isSend, 1)).over(w))
+      .withColumn("__last_send", last(when(isSend, col("ts_ns")), ignoreNulls = true).over(w))
+      .withColumn("__first_recv", min(when(!isSend, col("ts_ns"))).over(w))
+      .filter(
+        (!isSend && (col("__prior_s") >= 1 || col("__prior_r") >= 1)) ||
+          (isSend && col("__prior_s") === 0 && col("__prior_r") >= 1))
+      // a receive's sent time is NULL when no send precedes it (the
+      // reference's panic, rationalized)
+      .withColumn("sent_ns", when(isSend, col("ts_ns")).otherwise(col("__last_send")))
+      .withColumn("received_ns", when(isSend, col("__first_recv")).otherwise(col("ts_ns")))
+      .drop("side", "ts_ns", "__prior_s", "__prior_r", "__last_send", "__first_recv")
   }
 
   /** One-directional FIFO queue matching with discard-at-empty — the

@@ -33,8 +33,8 @@ object StreamingPipeline {
       .text(dir)
       .select(input_file_name().as("src_file"), col("value")))
     // stream-static metadata join (P7): batch scan of the same dir, with
-    // the same fail-fast filter as the batch path
-    val meta = LogIngest.metadata(LogIngest.readLines(spark, dir))
+    // the same fail-fast checks as the batch path
+    val meta = LogIngest.metadata(spark, dir)
     Normalize.normalize(lines.join(broadcast(meta), Seq("src_file")))
   }
 
@@ -47,8 +47,9 @@ object StreamingPipeline {
                                  latencyMs: Option[Long])
   final case class PairState(created: Boolean, sentNs: Option[Long])
 
-  /** Streaming J1: keyed vote pairing with explicit state — the SAME
-    * overwrite-on-send machine as the batch analytic
+  /** Streaming J1: keyed vote pairing with explicit state over the batch
+    * analytic's tagged sides ([[graft.cometbft.Analytics.VoteLatency.sides]])
+    * — the SAME overwrite-on-send machine as the batch analytic
     * ([[graft.operators.PairingJoin.confirmOnReceive]]): a send overwrites
     * the entry, every receive after the first event at its key yields a
     * confirmation against the last send (NULL sent time when the entry
@@ -60,24 +61,17 @@ object StreamingPipeline {
     * end-of-input flush: a later batch extending an epoch cannot retract
     * already-emitted rows). Rows are time-ordered within each micro-batch;
     * cross-batch order is arrival order (streaming reality — closed-input
-    * single-batch runs match batch exactly).
+    * single-batch runs match batch exactly). Ties at one timestamp process
+    * sends first, as in the batch machine.
     *
     * No state timeout: a processing-time timeout makes the engine schedule
     * timeout-check batches forever, which never drains for closed-input
     * `processAllAvailable` runs. */
   def voteLatencyStream(spark: SparkSession, ev: DataFrame): Dataset[ConfirmedVote] = {
     import spark.implicits._
-    val sides = ev
-      .filter(col("event_type").isin("send_vote", "receive_packet_vote"))
-      .select(
-        col("vote.height").as("height"), col("vote.round").as("round"),
-        col("vote.validatorIndex").as("valIdx"),
-        when(col("event_type") === "send_vote", col("node_id"))
-          .otherwise(col("source_peer_id")).as("sender"),
-        when(col("event_type") === "send_vote", col("recipient_peer_id"))
-          .otherwise(col("node_id")).as("receiver"),
-        when(col("event_type") === "send_vote", "send").otherwise("receive").as("side"),
-        col("ts_ns").as("tsNs"))
+    val sides = Analytics.VoteLatency.sides(ev)
+      .select(col("height"), col("round"), col("val_idx").as("valIdx"), col("sender"),
+        col("receiver"), col("side"), col("ts_ns").as("tsNs"))
       .as[VoteSide]
 
     sides
@@ -134,7 +128,7 @@ object StreamingPipeline {
     * before it; a receive whose priors are only receives confirms with a
     * NULL sent time (the reference's rationalized nil-assertion panic);
     * the FIRST send confirms a pending first receive (negative latency).
-    * Ties at one timestamp process sends first (batch `__side` order). */
+    * Ties at one timestamp process sends first, as in the batch machine. */
   def p2pConfirmStream(spark: SparkSession, ev: DataFrame): Dataset[P2pConfirmed] = {
     import spark.implicits._
     val sides = Analytics.P2pMessages.sides(ev)
@@ -182,8 +176,11 @@ object StreamingPipeline {
                             recvs: Seq[(String, String, Long)])
 
   /** Streaming J4: the network-latency two-pass matcher
-    * (`network-latency/processor.go:122-328`) as ONE stateful operator.
-    * Keying by `rawHash` makes both passes group-local — the composite key
+    * (`network-latency/processor.go:122-328`) as ONE stateful operator over
+    * the batch analytic's tagged sides
+    * ([[graft.cometbft.Analytics.NetworkLatency.sides]], a TrySend's missing
+    * receiver read as ""). Keying by `rawHash` makes both passes
+    * group-local — the composite key
     * (sender, receiver, rawHash) refines the group, and the raw-hash
     * fallback pool IS the group — so the sequential reference machine
     * replays directly against keyed state: a receive pops the oldest
@@ -205,19 +202,10 @@ object StreamingPipeline {
     * micro-batch; a closed single-batch run reproduces batch order. */
   def networkLatencyStream(spark: SparkSession, ev: DataFrame): Dataset[NlMeasurement] = {
     import spark.implicits._
-    val sides = ev
-      .filter(col("event_type").startsWith("send_") ||
-        (col("event_type").startsWith("receive_packet_") &&
-          col("source_peer_id") =!= col("node_id"))) // P6 self-communication filter
-      .select(
-        sha2(col("msg_bytes"), 256).as("rawHash"),
-        when(col("event_type").startsWith("send_"), col("node_id"))
-          .otherwise(col("source_peer_id")).as("sender"),
-        when(col("event_type").startsWith("send_"), coalesce(col("recipient_peer_id"), lit("")))
-          .otherwise(col("node_id")).as("receiver"),
-        when(col("event_type").startsWith("send_"), "send").otherwise("recv").as("side"),
-        regexp_replace(col("event_type"), "^(send_|receive_packet_)", "").as("msgType"),
-        col("ts_ns").as("tsNs"))
+    val sides = Analytics.NetworkLatency.sides(ev)
+      .select(col("raw_hash").as("rawHash"), col("sender"),
+        coalesce(col("receiver"), lit("")).as("receiver"), col("side"),
+        col("msg_type").as("msgType"), col("ts_ns").as("tsNs"))
       .as[NlSide]
 
     sides

@@ -158,23 +158,20 @@ class NetworkLatencySimSpec extends AnyFunSuite {
 
       // ---- relational formulation
       import spark.implicits._
-      val sendRows = events.collect {
-        case DSend(s, r, h, t) => (s, Option(r), h, "vote", t)
-        case TSend(s, h, t)    => (s, Option.empty[String], h, "vote", t)
-      }.toSeq
-      val recvRows = events.collect {
-        case DRecv(s, r, h, t) => (s, r, h, "vote", t)
-        case FRecv(s, r, h, t) => (s, r, h, "vote", t)
-      }.toSeq
-      val sendsDF = sendRows.toDF("sender", "receiver", "raw_hash", "msg_type", "sent_ns")
-      val recvsDF = recvRows.toDF("sender", "receiver", "raw_hash", "msg_type", "received_ns")
-      val mdf = Analytics.NetworkLatency.fifoMatch(sendsDF, recvsDF)
+      // one tagged frame, the shape of NetworkLatency.sides
+      val sides = events.map {
+        case DSend(s, r, h, t) => (s, Option(r), "send", h, "vote", t)
+        case TSend(s, h, t)    => (s, Option.empty[String], "send", h, "vote", t)
+        case DRecv(s, r, h, t) => (s, Option(r), "recv", h, "vote", t)
+        case FRecv(s, r, h, t) => (s, Option(r), "recv", h, "vote", t)
+      }.toSeq.toDF("sender", "receiver", "side", "raw_hash", "msg_type", "ts_ns")
+      val mdf = Analytics.NetworkLatency.fifoMatch(sides)
 
       val gotMeas = mdf.select("sender", "receiver", "raw_hash", "sent_ns", "received_ns", "match_type")
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4), r.getString(5)))
         .sortBy(m => (m._4, m._5, m._1)).toSeq
-      val stats = Analytics.NetworkLatency.nodeStats(sendsDF, recvsDF, mdf)
+      val stats = Analytics.NetworkLatency.nodeStats(sides, mdf)
         .select("node_id", "unmatched_sends", "unmatched_receives").collect()
       def got(i: Int) = stats.map(r => r.getString(0) -> r.getLong(i)).toMap.filter(_._2 != 0)
       val (gotUnmatchedSends, gotUnmatchedRecvs) = (got(1), got(2))

@@ -116,6 +116,19 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(collect(plan) { case w: WindowExec => w }.size <= 6)
   }
 
+  test("each pairing table reads its one tagged projection: one scan of events") {
+    // a send frame and a receive frame scanned events once each
+    val events = t("events")
+    Seq(Analytics.VoteLatency, Analytics.BlockParts, Analytics.P2pMessages, Analytics.NetworkLatency)
+      .flatMap(_.run(events))
+      .filter { case (name, _) => Set("vote_latencies", "block_part_latencies", "p2p_messages",
+        "network_latency_duplicates_debug")(name) }
+      .foreach { case (name, df) =>
+        val scans = collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+        assert(scans.size == 1, s"$name scans events ${scans.size} times")
+      }
+  }
+
   test("malformed round-info strings drop their line; the run and the valid lines go on") {
     def ts(i: Int) = f"2025-06-09T00:00:00.$i%09dZ"
     def newRound(i: Int, previous: String) =

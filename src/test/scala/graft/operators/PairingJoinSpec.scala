@@ -70,13 +70,17 @@ class PairingJoinSpec extends AnyFunSuite {
     assert(rolled.count() == 2) // the singleton session is dropped
   }
 
+  /** `sends` and `recvs` as one frame tagged with `side` — the shape the
+    * confirm machines read. */
+  private def sides(sends: org.apache.spark.sql.DataFrame, recvs: org.apache.spark.sql.DataFrame) =
+    sends.withColumn("side", lit("send")).unionByName(recvs.withColumn("side", lit("recv")))
+
   test("confirmOnReceive reproduces the reference overwrite machine exactly") {
     def run(sends: Seq[(String, Long)], recvs: Seq[(String, Long)]) =
       PairingJoin.confirmOnReceive(
-          sends.toDF("key", "sent_ns"), recvs.toDF("key", "recv_ns"),
-          Seq("key"), "sent_ns", "recv_ns")
-        .orderBy("recv_ns")
-        .select("sent_ns", "recv_ns")
+          sides(sends.toDF("key", "ts_ns"), recvs.toDF("key", "ts_ns")), Seq("key"))
+        .orderBy("received_ns")
+        .select("sent_ns", "received_ns")
         .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1))).toSeq
 
     // S R -> one confirmation
@@ -105,10 +109,10 @@ class PairingJoinSpec extends AnyFunSuite {
     // or first receive) and a confirming receive never replaces it.
     def run(sends: Seq[(String, Long, String)], recvs: Seq[(String, Long, String)]) =
       PairingJoin.confirmOnReceive(
-          sends.toDF("key", "sent_ns", "payload"), recvs.toDF("key", "recv_ns", "payload"),
-          Seq("key"), "sent_ns", "recv_ns", Seq("payload"))
-        .orderBy("recv_ns")
-        .select("payload", "recv_ns").as[(String, Long)].collect().toSeq
+          sides(sends.toDF("key", "ts_ns", "payload"), recvs.toDF("key", "ts_ns", "payload")),
+          Seq("key"), Seq("payload"))
+        .orderBy("received_ns")
+        .select("payload", "received_ns").as[(String, Long)].collect().toSeq
 
     // S(vB) R(vX) -> confirmation carries the send's payload
     assert(run(Seq(("k", 10L, "vB")), Seq(("k", 20L, "vX"))) == Seq(("vB", 20L)))
@@ -126,9 +130,8 @@ class PairingJoinSpec extends AnyFunSuite {
   test("confirmEitherOrder reproduces the p2p per-key entry machine") {
     def run(sends: Seq[(String, Long)], recvs: Seq[(String, Long)]) =
       PairingJoin.confirmEitherOrder(
-          sends.toDF("key", "sent_ns"), recvs.toDF("key", "recv_ns"),
-          Seq("key"), "sent_ns", "recv_ns")
-        .select("sent_ns", "recv_ns")
+          sides(sends.toDF("key", "ts_ns"), recvs.toDF("key", "ts_ns")), Seq("key"))
+        .select("sent_ns", "received_ns")
         .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1)))
         .sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq
 
@@ -173,60 +176,95 @@ class PairingJoinSpec extends AnyFunSuite {
       val sends = events.filter(_._3).map(e => (e._1, e._2))
       val recvs = events.filterNot(_._3).map(e => (e._1, e._2))
 
-      // sequential simulation of vote-latency (confirm-on-receive) machine,
-      // payload = entry-creating event's tag (vl.Vote semantics). The
-      // appended REFERENCE is kept (processor.go:43-45 pointer aliasing):
-      // rows materialize only after the stream ends, from the entry's
-      // final mutated state.
-      class Entry(var sent: Option[Long], val payload: String) { var recvFinal = 0L }
-      val m1 = scala.collection.mutable.Map[String, Entry]()
-      val appended1 = scala.collection.mutable.ArrayBuffer[Entry]()
-      // sequential simulation of p2p (either-order) machine
-      sealed trait St
-      case class Sent(ts: Long) extends St
-      case class Received(ts: Long) extends St
-      case class Confirmed(sent: Long) extends St
-      val m2 = scala.collection.mutable.Map[String, St]()
-      val want2 = scala.collection.mutable.ArrayBuffer[(Option[Long], Long)]()
-      events.sortBy(e => (e._2, if (e._3) 0 else 1)).foreach { case (k, t, isSend) =>
-        if (isSend) {
-          m1(k) = new Entry(Some(t), s"p$t")
-          m2.get(k) match {
-            case Some(Received(rts)) => want2 += ((Some(t), rts)); m2(k) = Confirmed(t)
-            case _                   => m2(k) = Sent(t)
-          }
-        } else {
-          m1.get(k) match {
-            case None    => m1(k) = new Entry(None, s"p$t")
-            case Some(e) => e.recvFinal = t; appended1 += e
-          }
-          m2.get(k) match {
-            case None               => m2(k) = Received(t)
-            case Some(Sent(sts))    => want2 += ((Some(sts), t)); m2(k) = Confirmed(sts)
-            case Some(Confirmed(s)) => want2 += ((Some(s), t))
-            case Some(Received(_))  => fail("double pending receive should not be generated")
-          }
-        }
-      }
-
-      import spark.implicits._
-      val sDF = sends.toSeq.map(e => (e._1, e._2, s"p${e._2}")).toDF("key", "sent_ns", "payload")
-      val rDF = recvs.toSeq.map(e => (e._1, e._2, s"p${e._2}")).toDF("key", "recv_ns", "payload")
-      def collect(df: org.apache.spark.sql.DataFrame) =
-        df.select("sent_ns", "recv_ns").collect()
-          .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1)))
-          .sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq
-
-      val got1 = PairingJoin.confirmOnReceive(sDF, rDF, Seq("key"), "sent_ns", "recv_ns", Seq("payload"))
-        .select("sent_ns", "recv_ns", "payload").collect()
-        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1), r.getString(2)))
-        .sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq
-      val got2 = collect(PairingJoin.confirmEitherOrder(
-        sDF.drop("payload"), rDF.drop("payload"), Seq("key"), "sent_ns", "recv_ns"))
-      val want1 = appended1.map(e => (e.sent, e.recvFinal, e.payload))
-      assert(got1 == want1.sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq, s"trial $trial confirmOnReceive")
-      assert(got2 == want2.sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq, s"trial $trial confirmEitherOrder")
+      val (want1, want2) = simulate(events.toSeq)
+      val (got1, got2) = machines(sends.toSeq, recvs.toSeq)
+      assert(got1 == want1, s"trial $trial confirmOnReceive")
+      assert(got2 == want2, s"trial $trial confirmEitherOrder")
       assert(want1.nonEmpty && want2.nonEmpty)
     }
+  }
+
+  test("confirm machines process a send before a receive at the same timestamp") {
+    // Each stream has a send and a receive tied at one timestamp on one
+    // key, where processing the receive first would change the output.
+    def run(events: Seq[(String, Long, Boolean)]) = {
+      val got = machines(events.filter(_._3).map(e => (e._1, e._2)),
+        events.filterNot(_._3).map(e => (e._1, e._2)))
+      assert(got == simulate(events))
+      got
+    }
+    // S@20 R@20: the receive confirms the send. Receive-first would create
+    // the entry with the receive and let the send overwrite it silently.
+    val (on1, either1) = run(Seq(("k", 20L, true), ("k", 20L, false)))
+    assert(on1 == Seq((Some(20L), 20L, "p20")))
+    assert(either1 == Seq((Some(20L), 20L)))
+    // R@10 S@20 R@20: the send confirms the pending receive, then the tied
+    // receive confirms the send. Receive-first would find only receives
+    // before it (a NULL-sent confirmation).
+    val (on2, either2) = run(Seq(("k", 10L, false), ("k", 20L, true), ("k", 20L, false)))
+    assert(on2 == Seq((Some(20L), 20L, "p20")))
+    assert(either2 == Seq((Some(20L), 10L), (Some(20L), 20L)))
+  }
+
+  /** Both confirm machines over (key, ts) sends and receives; each event's
+    * payload is "p<ts>". Rows sorted by (received, sent). */
+  private def machines(sends: Seq[(String, Long)], recvs: Seq[(String, Long)]) = {
+    def withPayload(es: Seq[(String, Long)]) =
+      es.map(e => (e._1, e._2, s"p${e._2}")).toDF("key", "ts_ns", "payload")
+    val df = sides(withPayload(sends), withPayload(recvs))
+    val got1 = PairingJoin.confirmOnReceive(df, Seq("key"), Seq("payload"))
+      .select("sent_ns", "received_ns", "payload").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1), r.getString(2)))
+      .sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq
+    val got2 = PairingJoin.confirmEitherOrder(df.drop("payload"), Seq("key"))
+      .select("sent_ns", "received_ns").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1)))
+      .sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq
+    (got1, got2)
+  }
+
+  /** The reference machines replayed sequentially over (key, ts, isSend)
+    * events in time order, sends first at one timestamp: the vote-latency
+    * (confirm-on-receive) rows with the payload of the entry-creating
+    * event, and the p2p (either-order) rows. Sorted like [[machines]]. */
+  private def simulate(events: Seq[(String, Long, Boolean)]) = {
+    // sequential simulation of vote-latency (confirm-on-receive) machine,
+    // payload = entry-creating event's tag (vl.Vote semantics). The
+    // appended REFERENCE is kept (processor.go:43-45 pointer aliasing):
+    // rows materialize only after the stream ends, from the entry's
+    // final mutated state.
+    class Entry(var sent: Option[Long], val payload: String) { var recvFinal = 0L }
+    val m1 = scala.collection.mutable.Map[String, Entry]()
+    val appended1 = scala.collection.mutable.ArrayBuffer[Entry]()
+    // sequential simulation of p2p (either-order) machine
+    sealed trait St
+    case class Sent(ts: Long) extends St
+    case class Received(ts: Long) extends St
+    case class Confirmed(sent: Long) extends St
+    val m2 = scala.collection.mutable.Map[String, St]()
+    val want2 = scala.collection.mutable.ArrayBuffer[(Option[Long], Long)]()
+    events.sortBy(e => (e._2, if (e._3) 0 else 1)).foreach { case (k, t, isSend) =>
+      if (isSend) {
+        m1(k) = new Entry(Some(t), s"p$t")
+        m2.get(k) match {
+          case Some(Received(rts)) => want2 += ((Some(t), rts)); m2(k) = Confirmed(t)
+          case _                   => m2(k) = Sent(t)
+        }
+      } else {
+        m1.get(k) match {
+          case None    => m1(k) = new Entry(None, s"p$t")
+          case Some(e) => e.recvFinal = t; appended1 += e
+        }
+        m2.get(k) match {
+          case None               => m2(k) = Received(t)
+          case Some(Sent(sts))    => want2 += ((Some(sts), t)); m2(k) = Confirmed(sts)
+          case Some(Confirmed(s)) => want2 += ((Some(s), t))
+          case Some(Received(_))  => fail("double pending receive should not be generated")
+        }
+      }
+    }
+    val want1 = appended1.map(e => (e.sent, e.recvFinal, e.payload))
+    (want1.sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq,
+      want2.sortBy(p => (p._2, p._1.getOrElse(Long.MinValue))).toSeq)
   }
 }

@@ -104,16 +104,8 @@ class StreamingRandomParitySpec extends AnyFunSuite {
         s"select rawHash, sender, receiver, sentNs, receivedNs, matchType from $name")
         .collect().map(key).sorted.toSeq
 
-      val evDf = evs.toSeq.toDF()
-      val sends = evDf.filter($"event_type" === "send_vote")
-        .select($"node_id".as("sender"), $"recipient_peer_id".as("receiver"),
-          org.apache.spark.sql.functions.sha2($"msg_bytes", 256).as("raw_hash"),
-          org.apache.spark.sql.functions.lit("vote").as("msg_type"), $"ts_ns".as("sent_ns"))
-      val recvs = evDf.filter($"event_type" === "receive_packet_vote")
-        .select($"source_peer_id".as("sender"), $"node_id".as("receiver"),
-          org.apache.spark.sql.functions.sha2($"msg_bytes", 256).as("raw_hash"),
-          org.apache.spark.sql.functions.lit("vote").as("msg_type"), $"ts_ns".as("received_ns"))
-      val meas = graft.cometbft.Analytics.NetworkLatency.fifoMatch(sends, recvs)
+      val NetworkLatency = graft.cometbft.Analytics.NetworkLatency
+      val meas = NetworkLatency.fifoMatch(NetworkLatency.sides(evs.toSeq.toDF()))
       val batch = meas.select("raw_hash", "sender", "receiver", "sent_ns", "received_ns", "match_type")
         .collect().map(key).sorted.toSeq
       assert(streamed.nonEmpty && streamed == batch, s"trial $trial")
@@ -144,19 +136,10 @@ class StreamingRandomParitySpec extends AnyFunSuite {
     val streamed = spark.sql("select height, sentNs, receivedNs from p2p_rand")
       .collect().map(key).sorted.toSeq
 
-    val evDf = evs.toDF()
-    val sends = evDf.filter($"event_type" === "send_new_round_step")
-      .select($"decoded.height".as("height"), $"decoded.round".as("round"),
-        $"decoded.step".as("step"), $"node_id".as("sender"),
-        $"recipient_peer_id".as("receiver"), $"ts_ns".as("sent_ns"))
-    val recvs = evDf.filter($"event_type" === "receive_packet_new_round_step")
-      .select($"decoded.height".as("height"), $"decoded.round".as("round"),
-        $"decoded.step".as("step"), $"source_peer_id".as("sender"),
-        $"node_id".as("receiver"), $"ts_ns".as("received_ns"))
     val batch = graft.operators.PairingJoin.confirmEitherOrder(
-        sends, recvs, Seq("height", "round", "step", "sender", "receiver"),
-        "sent_ns", "received_ns")
-      .select("height", "sent_ns", "received_ns")
+        graft.cometbft.Analytics.P2pMessages.sides(evs.toDF()),
+        Seq("msg_family", "key", "sender", "receiver"))
+      .select($"key"(0).cast("long"), $"sent_ns", $"received_ns")
       .collect().map(key).sorted.toSeq
     assert(streamed.nonEmpty && streamed == batch)
   }

@@ -48,6 +48,15 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("the stream rejects an empty .log file, like the batch path") {
+    val logDir = java.nio.file.Files.createTempDirectory("graft-stream-empty-logs").toString
+    Fixtures.writeScenario(logDir, heights = 2)
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$logDir/node9.log"))
+    val err = intercept[IllegalArgumentException](
+      StreamingPipeline.events(spark, logDir, maxFilesPerTrigger = None))
+    assert(err.getMessage.contains("node ID or validator address not found in node9.log"))
+  }
+
   test("streaming exact dedup keeps first occurrence per content hash") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-stream").toString
